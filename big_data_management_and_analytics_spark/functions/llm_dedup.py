@@ -64,14 +64,11 @@ def _dense_token_ids(freq: DataFrame, key: str = "tok") -> DataFrame:
     Any bijection preserves every intersection size, so consumers'
     outputs are bit-identical to the string form.
 
-    Two estimate-hygiene choices, both measured (full story at the
-    llm_dedup_ssjoin call site): ``offsets_via_window`` keeps the rank's
-    Catalyst size estimate at the counter rows' own size (the default
-    triangle BroadcastNestedLoopJoin estimates as the child PRODUCT —
-    254 KB ballooned to 6.9 GB and flipped downstream broadcasts to
-    SortMergeJoins), and the identity groupBy (key is unique in freq;
-    first() over a singleton group is exact) re-enters the Aggregate
-    estimate class so downstream join planning stays sane."""
+    Estimate hygiene (full story at the llm_dedup_ssjoin call site): the
+    identity groupBy (key is unique in freq; first() over a singleton
+    group is exact) re-enters the Aggregate estimate class so downstream
+    join planning stays sane — without it the verify joins flip from
+    broadcast to SortMergeJoin."""
     from big_data_management_and_analytics_spark.operators.global_rank import (
         with_global_row_number,
     )
@@ -81,7 +78,6 @@ def _dense_token_ids(freq: DataFrame, key: str = "tok") -> DataFrame:
             freq,
             [F.col("df").asc(), F.col(key).asc()],
             rn="tid",
-            offsets_via_window=True,
         )
         .select(key, "tid")
         .groupBy(key)
@@ -593,11 +589,11 @@ def llm_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cut (4→3 bands) grew the bucket-graph diameter (per-round label
     # sums: 280630, 91395, 77506, 76506, 74502, 72595, 72220, 72220).
     # A slightly deeper corpus fires the loud non-convergence guard.
-    # Raising this bound requires raising COMPONENTS_ORACLE_ROUNDS with
-    # it (the declared oracle text) — a BUILD-round change, flagged in
-    # OPTIMIZATION_r11.md/r12.md; an optimization round must not edit
-    # the oracle.
-    for _ in range(8):
+    # The bound is COMPONENTS_ORACLE_ROUNDS, the same constant the
+    # declared oracle text unrolls; raising it edits the oracle — a
+    # BUILD-round change, flagged in OPTIMIZATION_r11.md/r12.md; an
+    # optimization round must not edit the oracle.
+    for _ in range(COMPONENTS_ORACLE_ROUNDS):
         if labels is None:
             # Iteration 1: every label IS its doc_id, so the bucket
             # minimum needs no label join at all — this also replaces
@@ -641,8 +637,9 @@ def llm_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not converged:
         raise RuntimeError(
             "llm_dedup_components: min-label propagation did not reach "
-            "its fixpoint within 8 rounds (bucket-graph diameter > 8); "
-            "raise COMPONENTS_ORACLE_ROUNDS and the loop bound together"
+            f"its fixpoint within {COMPONENTS_ORACLE_ROUNDS} rounds "
+            f"(bucket-graph diameter > {COMPONENTS_ORACLE_ROUNDS}); "
+            "raise COMPONENTS_ORACLE_ROUNDS"
         )
     return labels.select("doc_id", F.col("label").alias("component_rep"))
 
@@ -1271,16 +1268,15 @@ def llm_dedup_ssjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LongHashedRelation's duplicate-key chains than through the string
     # UnsafeHashedRelation; (b) struct<df,rnd> ids from a df-partitioned
     # window ran array_intersect 7× slower than strings (interpreted
-    # struct equality). offsets_via_window + the identity groupBy below
-    # are ESTIMATE hygiene: the triangle-join rank inflated Catalyst's
-    # size-only estimate 254 KB → 6.9 GB → 883 TB at tokarr, flipping
-    # the two verify BroadcastHashJoins to SortMergeJoins that shuffled
-    # the 7.5M-row candidate set twice (full query 3-4× SLOWER). The
-    # groupBy("tok") wrapper is the identity (tok is unique in vocab;
+    # struct equality). The identity groupBy inside _dense_token_ids is
+    # ESTIMATE hygiene: without it Catalyst's size-only estimate of the
+    # ranked vocabulary flips the two verify BroadcastHashJoins to
+    # SortMergeJoins that shuffle the 7.5M-row candidate set twice (full
+    # query 3-4× SLOWER; test_ssjoin_verify_joins_stay_broadcast pins
+    # it). groupBy("tok") is the identity (tok is unique in vocab;
     # first() over a singleton group is exact) but re-enters the
-    # Aggregate estimate class, so the downstream join estimates are
-    # sane again and the verify joins stay broadcast at fixture scale /
-    # AQE-decided at cluster scale.
+    # Aggregate estimate class, so the verify joins stay broadcast at
+    # fixture scale / AQE-decided at cluster scale.
     tokarr = toks.join(_dense_token_ids(freq), "tok").groupBy("doc_id").agg(
         F.sort_array(F.collect_list("tid")).alias("arr"),
         F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -1,115 +1,88 @@
 """Shared scaffold for the two-pass associative-scan family.
 
 One range shuffle (the shuffle a distributed sort of the output needs
-anyway), a per-partition aggregate of ≤ #partitions counter rows, a
-lower-triangle broadcast join turning those counters into per-partition
-prefix state, and a partitioned window for the in-partition scan. The
-three public members in ``global_rank.py`` (row number, prefix max,
-prefix sum) differ only in the aggregate, the cross-partition combine,
-and the finishing expression — everything else lives here once.
+anyway), a per-partition aggregate of ≤ #partitions counter rows folded
+into per-partition prefix state on the driver, and a partitioned window
+for the in-partition scan. The public members in ``global_rank.py`` (row
+number, prefix max, prefix sum(s)) differ only in the aggregate, the
+driver-side combine, and the finishing expression — everything else
+lives here once.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional, Sequence
+from typing import Any, Callable, Optional, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+from pyspark.sql.types import ArrayType, DataType, StructType
 
-# Pre-checkpoint ranged relation of the most recent two_pass_scan call —
-# plan-introspection hook only (the checkpoint makes the final plan start
-# at an RDD scan, so tests assert the range exchange on this instead).
-_LAST_RANGED_PRE_CHECKPOINT: Optional[DataFrame] = None
+
+def _literal(value: Any, dtype: DataType) -> Column:
+    """A collected (or driver-folded) value as a literal of type ``dtype``."""
+    if value is not None and isinstance(dtype, StructType):
+        return F.struct(
+            *[
+                _literal(value[i], f.dataType).alias(f.name)
+                for i, f in enumerate(dtype.fields)
+            ]
+        )
+    return F.lit(value).cast(dtype)
 
 
 def two_pass_scan(
     df: DataFrame,
     order: Sequence[Column],
     part_agg: Callable[[], Column],
-    lower_combine: Callable[[Column], Column],
+    combine: Callable[[Any, Any], Any],
     finish: Callable[[DataFrame], DataFrame],
-    num_partitions: Optional[int] = None,
     total: Optional[str] = None,
-    total_combine: Callable[[Column], Column] = lambda c: F.sum(c),
-    lower_window: Optional[Callable[[Column, object], Column]] = None,
 ) -> DataFrame:
     """Run the shared two-pass plan.
 
-    ``part_agg()`` aggregates each range partition to one ``_pagg`` row;
-    ``lower_combine(col)`` folds the lower partitions' ``_pagg`` values
-    into the ``_prefix`` column (it sees the left-join's possibly-null
-    lower rows); ``finish(df)`` receives the ranged rows joined with
-    ``_prefix`` (columns ``_pid`` and ``_prefix`` still present — the
-    scaffold drops them afterwards) and must add the output column(s).
-    ``total`` attaches the grand fold of ``_pagg`` via a 1-row broadcast;
-    ``total_combine`` is the aggregate used for that grand fold and must
-    match ``part_agg``'s monoid (default ``F.sum`` — a prefix-max caller
-    passing ``total`` must also pass ``F.max`` here).
+    ``part_agg()`` aggregates each range partition to one ``_pagg`` value.
+    The ≤ #partitions values are collected and folded on the driver with
+    ``combine(a, b)`` over the Python values as collected; ``None`` (no
+    predecessor, an empty partition, an all-null aggregate) is the fold's
+    identity, so ``combine`` only ever sees two non-None values.
+    ``finish(df)`` receives the ranged rows with ``_pid`` and ``_prefix``
+    — the fold of every LOWER partition, null for the first — and must
+    add the output column(s); the scaffold drops both afterwards.
+    ``total`` attaches the fold of every partition as a literal column.
     """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # The ranged relation feeds TWO subplans (the per-partition counter
-    # aggregate and the data-path join). Column pruning makes those two
-    # exchange subtrees non-identical, so Spark does NOT reuse the
-    # exchange — and under AQE the upstream shuffle can be coalesced
-    # DIFFERENTLY for each consumer, which changes the range sampler's
-    # input partitioning and hence the partition boundaries. The two
-    # evaluations then disagree on spark_partition_id per row and the
-    # offset join silently corrupts the scan (observed: prefix sums
-    # exceeding the relation size at shuffle=17). Materializing _pid
-    # ONCE via an eager localCheckpoint makes every consumer read the
-    # same frozen assignment. Cluster posture: blocks live on executors
-    # (lost executor = job retry from the checkpoint barrier), linear
-    # cost, same discipline as the iterative graph operators.
-    pre = df.repartitionByRange(num_partitions, *order).withColumn(
-        "_pid", F.spark_partition_id()
+    num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # The ranged relation feeds TWO plans (the counter collect and the
+    # data path). Evaluated twice, AQE can coalesce the upstream shuffle
+    # DIFFERENTLY for each, which changes the range sampler's input and
+    # hence the partition boundaries: the two evaluations then disagree
+    # on spark_partition_id per row and the offsets silently corrupt the
+    # scan (observed: prefix sums exceeding the relation size at
+    # shuffle=17). The eager localCheckpoint freezes _pid ONCE for every
+    # consumer. Cluster posture: linear cost, but localCheckpoint blocks
+    # live only on the executors that computed them — a lost executor
+    # loses its blocks and the query fails rather than recomputing.
+    # Reliable checkpoint() (to a shared checkpoint directory) is the
+    # answer for clusters where executor loss must be survived.
+    ranged = (
+        df.repartitionByRange(num_partitions, *order)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
-    # The checkpoint hides the range exchange behind an RDD scan in the
-    # final plan; keep the pre-checkpoint plan observable for the plan
-    # assertions (tests/test_plans.py reads this after building).
-    global _LAST_RANGED_PRE_CHECKPOINT
-    _LAST_RANGED_PRE_CHECKPOINT = pre
-    ranged = pre.localCheckpoint(eager=True)
     parts = ranged.groupBy("_pid").agg(part_agg().alias("_pagg"))
-    if lower_window is not None:
-        # r11 (guide §1.2 step 1 / §3.1): the triangle theta-join below is
-        # a BroadcastNestedLoopJoin, and Catalyst's size-only estimator
-        # prices a nested-loop join as the PRODUCT of its children — the
-        # counter relation's few-hundred-KB estimate balloons to GBs, and
-        # every relation built downstream of the scan output then loses
-        # its auto-broadcast eligibility (measured on llm_dedup_ssjoin's
-        # vocabulary rank: 254 KB → 6.9 GB → an 883 TB verify-side
-        # estimate that flipped two BroadcastHashJoins to SortMergeJoins
-        # shuffling the 7.5M-row candidate set twice; full query 3-4×
-        # slower). Callers whose scan OUTPUT feeds further join planning
-        # pass ``lower_window`` to fold the counters with a running
-        # window instead: it processes the SAME O(partitions) counter
-        # rows (one task over ≤ num_partitions rows — side-state, not the
-        # data path, exactly the triangle join's O(P²) work class) and
-        # keeps the size estimate at the counters' own size.
-        from pyspark.sql import Window
-
-        wc = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-        prefix = parts.select(
-            "_pid", lower_window(F.col("_pagg"), wc).alias("_prefix")
-        )
-    else:
-        lower = parts.select(
-            F.col("_pid").alias("_lpid"), F.col("_pagg").alias("_lagg")
-        )
-        # The triangle self-join is O(partitions²) pairs of counter rows —
-        # trivial at any data scale, and it avoids a single-partition
-        # running-fold window over the counters.
-        prefix = (
-            parts.join(F.broadcast(lower), F.col("_lpid") < F.col("_pid"), "left")
-            .groupBy("_pid")
-            .agg(lower_combine(F.col("_lagg")).alias("_prefix"))
-        )
-    out_df = finish(ranged.join(F.broadcast(prefix), "_pid")).drop(
-        "_pid", "_prefix"
-    )
+    dtype = parts.schema["_pagg"].dataType
+    pagg = dict(parts.collect())
+    prefixes, acc = [], None
+    for pid in range(max(pagg, default=0) + 1):
+        prefixes.append(_literal(acc, dtype))
+        b = pagg.get(pid)
+        acc = b if acc is None else acc if b is None else combine(acc, b)
+    # One array literal indexed by _pid: a projection, not a join, so no
+    # join's size-only estimate (the PRODUCT of its children) reaches the
+    # join planning downstream of the scan.
+    prefix = F.array(*prefixes).cast(ArrayType(dtype))
+    out_df = finish(
+        ranged.withColumn("_prefix", F.element_at(prefix, F.col("_pid") + 1))
+    ).drop("_pid", "_prefix")
     if total is not None:
-        grand = parts.agg(total_combine(F.col("_pagg")).alias(total))
-        out_df = out_df.crossJoin(F.broadcast(grand))
+        out_df = out_df.withColumn(total, _literal(acc, dtype))
     return out_df

@@ -962,7 +962,7 @@ def agg_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Gini concentration index of positive account balances — the "
         "inequality audit of a spend distribution. The rank-weighted sum "
         "uses the engine's two-pass global row_number (range partitions "
-        "+ broadcast offsets, no single-partition window) and exact "
+        "+ driver-folded offsets, no single-partition window) and exact "
         "integer-cents products (rn·cents fits a long at any fixture "
         "scale); one terminal double expression in the same operation "
         "order as the oracle, rounded 6."

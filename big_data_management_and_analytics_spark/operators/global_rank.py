@@ -10,9 +10,10 @@ replaces it with the classic two-pass formulation:
 2. Per-partition ``row_number`` under ``Window.partitionBy(_pid)`` — fully
    parallel, each range partition ranks independently.
 3. Global offsets: per-partition row counts (≤ shuffle-partition count of
-   them, i.e. O(partitions) not O(rows)) joined as a broadcast triangle
-   self-join (sum of counts of all lower partitions) — no single-partition
-   exchange anywhere on the data path.
+   them, i.e. O(partitions) not O(rows)) collected and summed on the
+   driver into each partition's lower-partition count, attached as one
+   array literal indexed by the partition id — a projection, no join and
+   no single-partition exchange anywhere on the data path.
 
 The result is bit-identical to the single-task global ``row_number`` as
 long as the sort key is a TOTAL order (callers must include a unique
@@ -26,6 +27,7 @@ them: tile sizes follow SQL NTILE semantics (first ``n % k`` tiles get
 
 from __future__ import annotations
 
+import operator
 from typing import Optional, Sequence
 
 import pyspark.sql.functions as F
@@ -36,45 +38,47 @@ from big_data_management_and_analytics_spark.operators._two_pass_scaffold import
 )
 
 
+def _spark_max(a, b):
+    """Spark's MAX order on two non-null values: NaN sorts above every
+    double (Python's ``max`` returns whichever argument came first)."""
+    return a if a != a or a >= b else b
+
+
+def _sum(a, b):
+    """Spark's SUM null handling on two values: nulls are skipped."""
+    return b if a is None else a if b is None else a + b
+
+
+def _plus(a: Column, b: Column) -> Column:
+    """``_sum`` as a column expression: a null running sum (an all-null
+    stretch of values) or a null prefix (nothing below) is skipped."""
+    return F.coalesce(a + b, a, b)
+
+
 def with_global_row_number(
     df: DataFrame,
     order: Sequence[Column],
     rn: str = "rn",
-    num_partitions: Optional[int] = None,
     total: Optional[str] = None,
-    offsets_via_window: bool = False,
 ) -> DataFrame:
     """Attach a global ``row_number`` over a total order without a
     single-partition window; optionally attach the grand total row count.
 
     ``order`` must be a total order (include a unique tiebreak). The rank
     column is LongType. When ``total`` is given, a column of that name
-    carries COUNT(*) (broadcast — the only single-partition step is the
-    final reduce of ≤ #partitions counter rows).
-
-    ``offsets_via_window`` folds the per-partition counters with a
-    running window over the ≤ #partitions counter rows instead of the
-    triangle theta-join — identical values, but it keeps Catalyst's size
-    estimate at the counters' own size instead of the nested-loop join's
-    child PRODUCT (see two_pass_scan). Pass it when the ranked output
-    feeds further join planning (broadcast decisions downstream).
+    carries COUNT(*) (a literal folded on the driver from the ≤
+    #partitions counter rows).
     """
     w = Window.partitionBy("_pid").orderBy(*order)
     return two_pass_scan(
         df,
         order,
         part_agg=lambda: F.count(F.lit(1)),
-        lower_combine=lambda c: F.coalesce(F.sum(c), F.lit(0)),
+        combine=operator.add,
         finish=lambda j: j.withColumn(
-            rn, F.row_number().over(w) + F.col("_prefix")
+            rn, _plus(F.row_number().over(w), F.col("_prefix"))
         ),
-        num_partitions=num_partitions,
         total=total,
-        lower_window=(
-            (lambda c, wc: F.coalesce(F.sum(c).over(wc), F.lit(0)))
-            if offsets_via_window
-            else None
-        ),
     )
 
 
@@ -110,18 +114,16 @@ def with_global_prefix_max(
     order_col: str,
     value_col: str,
     out: str,
-    offsets_via_window: bool = False,
 ) -> DataFrame:
     """Attach the STRICT prefix max of ``value_col`` over the total order
     ``order_col`` (max over all rows ordered strictly before; null for the
     first row) without a single-partition window.
 
-    Same two-pass shape as ``global_rank.with_global_row_number``: range
-    shuffle on the order key, per-partition running max (exclusive frame),
-    per-partition totals broadcast-joined as a lower-triangle prefix —
-    max is associative, so the per-partition scan + cross-partition
-    combine is exact. O(partitions²) counter rows on the driver-free side
-    path; the data path stays fully parallel.
+    Same two-pass shape as ``with_global_row_number``: range shuffle on
+    the order key, per-partition running max (exclusive frame), and the
+    per-partition maxima folded on the driver into each partition's
+    lower-partition max — max is associative, so the per-partition scan
+    + cross-partition combine is exact.
     """
     w = (
         Window.partitionBy("_pid")
@@ -134,12 +136,9 @@ def with_global_prefix_max(
         df,
         [F.col(order_col)],
         part_agg=lambda: F.max(value_col),
-        lower_combine=F.max,
+        combine=_spark_max,
         finish=lambda j: j.withColumn(
             out, F.greatest(F.col("_prefix"), F.max(value_col).over(w))
-        ),
-        lower_window=(
-            (lambda c, wc: F.max(c).over(wc)) if offsets_via_window else None
         ),
     )
 
@@ -149,7 +148,6 @@ def with_global_prefix_sums(
     order: Sequence[Column],
     value_cols: Sequence[str],
     outs: Sequence[str],
-    offsets_via_window: bool = False,
 ) -> DataFrame:
     """Inclusive prefix sums of SEVERAL long columns over one total order
     in a single range shuffle (struct-aggregated two-pass scan).
@@ -158,7 +156,7 @@ def with_global_prefix_sums(
     running counts of two or more groups along the same value order;
     running ``with_global_prefix_sum`` per column would repeat the range
     shuffle. Here the per-partition aggregate is a struct of sums and the
-    lower-triangle combine folds each field independently — one shuffle
+    driver-side combine folds each field independently — one shuffle
     regardless of column count. Exact arithmetic only (long columns).
     """
     w = (
@@ -171,7 +169,7 @@ def with_global_prefix_sums(
     def finish(j: DataFrame) -> DataFrame:
         for fld, col, out in zip(fields, value_cols, outs):
             j = j.withColumn(
-                out, F.sum(col).over(w) + F.col("_prefix").getField(fld)
+                out, _plus(F.sum(col).over(w), F.col("_prefix").getField(fld))
             )
         return j
 
@@ -181,25 +179,8 @@ def with_global_prefix_sums(
         part_agg=lambda: F.struct(
             *[F.sum(c).alias(f) for c, f in zip(value_cols, fields)]
         ),
-        lower_combine=lambda c: F.struct(
-            *[
-                F.coalesce(F.sum(c.getField(f)), F.lit(0)).alias(f)
-                for f in fields
-            ]
-        ),
+        combine=lambda a, b: tuple(map(_sum, a, b)),
         finish=finish,
-        lower_window=(
-            (
-                lambda c, wc: F.struct(
-                    *[
-                        F.coalesce(F.sum(c.getField(f)).over(wc), F.lit(0)).alias(f)
-                        for f in fields
-                    ]
-                )
-            )
-            if offsets_via_window
-            else None
-        ),
     )
 
 
@@ -209,7 +190,6 @@ def with_global_prefix_sum(
     value_col: str,
     out: str,
     total: Optional[str] = None,
-    offsets_via_window: bool = False,
 ) -> DataFrame:
     """Attach the INCLUSIVE prefix sum of ``value_col`` (a long column —
     exact arithmetic only) over the total order ``order`` without a
@@ -217,8 +197,8 @@ def with_global_prefix_sum(
 
     Third member of the two-pass family (row number, prefix max, prefix
     sum — all associative scans over the same range shuffle): range
-    partitions, per-partition inclusive running sum, lower-triangle
-    broadcast of per-partition totals as the cross-partition offset.
+    partitions, per-partition inclusive running sum, and the driver-folded
+    sum of the lower partitions as the cross-partition offset.
     """
     w = (
         Window.partitionBy("_pid")
@@ -229,14 +209,9 @@ def with_global_prefix_sum(
         df,
         order,
         part_agg=lambda: F.sum(value_col),
-        lower_combine=lambda c: F.coalesce(F.sum(c), F.lit(0)),
+        combine=operator.add,
         finish=lambda j: j.withColumn(
-            out, F.sum(value_col).over(w) + F.col("_prefix")
+            out, _plus(F.sum(value_col).over(w), F.col("_prefix"))
         ),
         total=total,
-        lower_window=(
-            (lambda c, wc: F.coalesce(F.sum(c).over(wc), F.lit(0)))
-            if offsets_via_window
-            else None
-        ),
     )

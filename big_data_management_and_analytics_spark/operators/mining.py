@@ -447,7 +447,8 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "global running revenue total runs through the NEW two-pass "
         "prefix-SUM scan (global_rank.with_global_prefix_sum: range "
         "shuffle on (revenue DESC, custkey), per-partition inclusive "
-        "running sum, broadcast lower-triangle offsets) — no single-"
+        "running sum, driver-folded per-partition offsets attached as "
+        "a literal) — no single-"
         "partition window touches the customer relation. Class "
         "boundaries compare EXACT integer cents (cum·100 ≤ total·80), "
         "so no float threshold wobble exists; the only doubles are the "

@@ -40,7 +40,7 @@ def sort_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").asc(),
     ]
     # Two-pass global rank: repartitionByRange on the sort key + per-range
-    # row_number + broadcast offsets — same result as a global-window
+    # row_number + driver-folded offsets — same result as a global-window
     # ROW_NUMBER but with no single-partition funnel (scale posture §4).
     ranked = with_global_row_number(o, order, rn="sort_pos")
     return ranked.select(

@@ -105,10 +105,19 @@ _REPO_ROOT = Path(__file__).resolve().parent.parent.parent
 # Maintain by hand whenever a round changes a driver-verified query's
 # implementation.
 REVERIFY_FIRST: dict[str, int] = {
-    "llm_dedup_ssjoin": 12,  # r11 dense ids; r12 prefix-side join cleanup
     "graph_label_propagation": 11,
-    "llm_dedup_near_exact": 11,
     "mkt_item_similarity": 12,  # r12 dual-direction fused pair aggregate
+    # r13: the two-pass scan's counter fold moved to the driver (literal
+    # prefix array instead of the triangle join / running-window fold).
+    **dict.fromkeys(
+        """agg_abc_analysis agg_auc_roc agg_equidepth agg_gini agg_ks_test
+        agg_lift_chart agg_mannwhitney events_concurrency
+        events_cumulative_uniques events_rfm feat_quantile_bin graph_hits
+        llm_curriculum_order llm_dedup_near_exact llm_dedup_ssjoin
+        skyline_pareto sort_multikey sort_natural win_ntile
+        win_pct_cume""".split(),
+        13,
+    ),
 }
 
 

@@ -8,21 +8,36 @@ from tests.conftest import SF_T2
 
 # An unpartitioned window's spec leads straight into a sort order; a
 # partitioned one leads with plain partition columns. Shared by the fast
-# named check, the skyline/equidepth checks, and the exhaustive scan.
-# Declared side-state exception (r12, ADVICE r11): the two-pass
-# scaffold's `offsets_via_window` counter fold runs a running window
-# ordered by `_pid` over ≤ num_partitions counter rows — O(#partitions)
-# side-state, the same work class as the triangle join it replaces, and
-# never a data-path relation (_two_pass_scaffold.py documents the
-# contract). Specs ordered by `_pid` are therefore exempt from the
-# single-partition-window invariant.
-GLOBAL_WINDOW_SPEC = r"windowspecdefinition\((?!_pid#)[^,()]+ (ASC|DESC)"
+# named check, the skyline/equidepth checks, and the exhaustive scan. No
+# exemption: the two-pass scan folds its counter rows on the driver, so
+# no window of any kind runs unpartitioned.
+GLOBAL_WINDOW_SPEC = r"windowspecdefinition\([^,()]+ (ASC|DESC)"
 
 
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def _executed_plans(spark, build) -> str:
+    """Run ``build()`` and return the physical plans of every SQL
+    execution it started, read from the SQL status store. The two-pass
+    scan's eager _pid checkpoint hides its range exchange behind an RDD
+    scan in the returned DataFrame's plan; the checkpoint's own execution
+    still carries it."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    n = store.executionsCount()
+    eid = store.executionsList(n - 1, 1).head().executionId() + 1 if n else 0
+    build()
+    bus.waitUntilEmpty()
+    plans = []
+    while (rec := store.execution(eid)).isDefined():
+        plans.append(rec.get().physicalPlanDescription())
+        eid += 1
+    return "\n".join(plans)
 
 
 def test_filter_pushdown_reaches_scan(spark, registry):
@@ -343,18 +358,13 @@ def test_global_rank_is_range_partitioned(spark, registry):
     """The two-pass rank must shuffle by range on the sort key (the same
     shuffle a distributed sort needs), not hash — range partitions are what
     make per-partition row numbers globally contiguous."""
-    from big_data_management_and_analytics_spark.operators import _two_pass_scaffold
-
     for name, key in (
         ("sort_multikey", "o_orderpriority"),
         ("win_ntile", "c_acctbal"),
         ("win_pct_cume", "s_acctbal"),
     ):
-        registry[name].fn(spark, SF_T2)
-        # The scan's _pid checkpoint hides the exchange in the final plan;
-        # assert on the recorded pre-checkpoint relation instead.
-        plan = _plan(_two_pass_scaffold._LAST_RANGED_PRE_CHECKPOINT)
-        assert f"rangepartitioning({key}" in plan, f"{name}: no range exchange"
+        plans = _executed_plans(spark, lambda: registry[name].fn(spark, SF_T2))
+        assert f"rangepartitioning({key}" in plans, f"{name}: no range exchange"
 
 
 def test_near_exact_parallelizes_nested_loop(spark, registry):
@@ -492,15 +502,10 @@ def test_dpp_injects_runtime_partition_filter(spark, registry):
 def test_skyline_no_dominance_pair_space(spark, registry):
     """The skyline plan must be the prefix-max scan, not the O(n²)
     dominance self-join: a range exchange on the price key exists, and
-    every nested-loop join in the plan is the counter-row triangle
-    (condition on _lpid/_pid) — never a part×part dominance test."""
-    import re
-
+    no nested-loop join or cartesian product appears anywhere."""
     plan = _plan(registry["skyline_pareto"].fn(spark, SF_T2))
     assert "rangepartitioning(p_retailprice" in plan
-    nlj_nodes = re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan)
-    triangle = re.findall(r"Join condition: \(_lpid", plan)
-    assert len(nlj_nodes) == len(triangle), (nlj_nodes, triangle)
+    assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
@@ -509,10 +514,11 @@ def test_equidepth_uses_two_pass_rank(spark, registry):
     exchange on the sort key, and no unpartitioned window anywhere."""
     import re
 
-    from big_data_management_and_analytics_spark.operators import _two_pass_scaffold
-
-    plan = _plan(registry["agg_equidepth"].fn(spark, SF_T2))
-    ranged = _plan(_two_pass_scaffold._LAST_RANGED_PRE_CHECKPOINT)
+    built = []
+    ranged = _executed_plans(
+        spark, lambda: built.append(registry["agg_equidepth"].fn(spark, SF_T2))
+    )
+    plan = _plan(built[0])
     assert "rangepartitioning(o_totalprice" in ranged
     gspec = re.compile(GLOBAL_WINDOW_SPEC)
     specs = [l for l in plan.splitlines() if "windowspecdefinition" in l]
@@ -614,11 +620,12 @@ def test_ks_test_range_shuffle_no_global_window(spark, registry):
     prefix sum) and no single-partition window anywhere."""
     import re
 
-    from big_data_management_and_analytics_spark.operators import _two_pass_scaffold
-
-    plan = _plan(registry["agg_ks_test"].fn(spark, SF_T2))
-    ranged = _plan(_two_pass_scaffold._LAST_RANGED_PRE_CHECKPOINT)
-    assert "rangepartitioning" in ranged.lower(), ranged[:800]
+    built = []
+    ranged = _executed_plans(
+        spark, lambda: built.append(registry["agg_ks_test"].fn(spark, SF_T2))
+    )
+    plan = _plan(built[0])
+    assert "rangepartitioning(v#" in ranged, ranged[:800]
     for spec in re.finditer(GLOBAL_WINDOW_SPEC, plan):
         raise AssertionError(f"global window in agg_ks_test: {spec.group(0)}")
 
@@ -874,36 +881,11 @@ def test_gram_expression_never_below_spread_exchange(spark, registry):
         )
 
 
-def test_two_pass_window_offsets_match_triangle(spark):
-    """r11: `offsets_via_window` must be value-identical to the default
-    triangle-join counter fold — it exists purely for Catalyst estimate
-    hygiene (the BroadcastNestedLoopJoin triangle's size-only estimate is
-    the child PRODUCT, which poisons downstream broadcast decisions)."""
-    import pyspark.sql.functions as F
-
-    from big_data_management_and_analytics_spark.operators.global_rank import (
-        with_global_row_number,
-    )
-    from big_data_management_and_analytics_spark.sources.io import load
-
-    c = load(spark, SF_T2, "customer").select("c_custkey", "c_acctbal")
-    order = [F.col("c_acctbal").asc(), F.col("c_custkey").asc()]
-    tri = {
-        r["c_custkey"]: r["rn"]
-        for r in with_global_row_number(c, order, rn="rn").collect()
-    }
-    win = {
-        r["c_custkey"]: r["rn"]
-        for r in with_global_row_number(
-            c, order, rn="rn", offsets_via_window=True
-        ).collect()
-    }
-    assert tri == win
-
-
-def test_two_pass_window_offsets_plan_has_no_nlj(spark):
-    """The window-offset fold must actually remove the nested-loop
-    triangle (its presence would mean the estimate poison is back)."""
+def test_two_pass_rank_plan_has_no_nlj(spark):
+    """The two-pass rank attaches its offsets by projection, never a
+    nested-loop join: Catalyst's size-only estimate of a nested-loop join
+    is the PRODUCT of its children, which poisons downstream broadcast
+    decisions."""
     import pyspark.sql.functions as F
 
     from big_data_management_and_analytics_spark.operators.global_rank import (
@@ -917,7 +899,6 @@ def test_two_pass_window_offsets_plan_has_no_nlj(spark):
             c,
             [F.col("c_acctbal").asc(), F.col("c_custkey").asc()],
             rn="rn",
-            offsets_via_window=True,
         )
     )
     assert "BroadcastNestedLoopJoin" not in plan

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import duckdb
 import pyspark.sql.functions as F
+import pytest
 
 from big_data_management_and_analytics_spark.plans.determinism import cents
 
@@ -182,6 +183,74 @@ def test_global_prefix_sum_matches_cumsum(spark):
     for k, v in vals:
         running += v
         assert out[k] == (running, total), k
+
+
+@pytest.mark.parametrize("width", [7, 17, 32])
+def test_two_pass_helpers_match_single_partition_window(spark, width):
+    """Every two-pass helper, with and without ``total``, must equal the
+    single-partition ``Window.orderBy`` reference at several shuffle
+    widths (17 is the width where AQE once re-drew the range bounds per
+    consumer). The inputs cover n < width (empty range partitions), a run
+    of null values longer than a range partition (an all-null partition
+    aggregate), and a NaN in the prefix-max column: Spark orders NaN
+    above every double, so the driver-side fold must too."""
+    from pyspark.sql import Window
+
+    from big_data_management_and_analytics_spark.operators.global_rank import (
+        with_global_prefix_max,
+        with_global_prefix_sum,
+        with_global_prefix_sums,
+        with_global_row_number,
+    )
+
+    def rows(n):
+        nulls = range(n // 4, n // 2)
+        for k in range(n):
+            v = None if k in nulls else (k * 37) % 101 - 50
+            d = float("nan") if k == n // 2 else None if k in nulls else float(k % 13)
+            yield k, v, k % 3, d
+
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    try:
+        for n in (5, 300):
+            df = spark.createDataFrame(
+                list(rows(n)), schema="k long, v long, w long, d double"
+            ).repartition(3)
+            order = [F.col("k").asc()]
+            upto = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
+            before = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, -1)
+            tot = df.agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("t")).first()
+            ref = df.select(
+                "k",
+                F.row_number().over(Window.orderBy("k")).cast("long").alias("rn"),
+                F.sum("v").over(upto).alias("cv"),
+                F.sum("w").over(upto).alias("cw"),
+                F.max("d").over(before).alias("pm"),
+                F.lit(tot["n"]).cast("long").alias("n"),
+                F.lit(tot["t"]).cast("long").alias("t"),
+            )
+
+            def same(got, cols):
+                def key(frame):
+                    return {r["k"]: repr(tuple(r[c] for c in cols)) for r in frame.collect()}
+
+                assert key(got) == key(ref), (width, n, cols)
+
+            same(with_global_row_number(df, order, rn="rn"), ["rn"])
+            same(with_global_row_number(df, order, rn="rn", total="n"), ["rn", "n"])
+            same(with_global_prefix_sum(df, order, "v", out="cv"), ["cv"])
+            same(
+                with_global_prefix_sum(df, order, "v", out="cv", total="t"),
+                ["cv", "t"],
+            )
+            same(
+                with_global_prefix_sums(df, order, ["v", "w"], ["cv", "cw"]),
+                ["cv", "cw"],
+            )
+            same(with_global_prefix_max(df, "k", "d", "pm"), ["pm"])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
 
 
 def test_dau_wau_matches_bruteforce_on_random_activity(spark, tmp_path):
