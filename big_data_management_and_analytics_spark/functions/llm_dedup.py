@@ -478,7 +478,12 @@ def _bucket_group_assign(
     )
 
 
-COMPONENTS_ORACLE_ROUNDS = 8
+# Bound of both the propagation loop and the oracle's unroll. Measured
+# labels change for 4 rounds at sf0.01 and 7 at sf0.1, and the loop needs
+# one more round to see that no label changed (5 and 8 rounds run). 12
+# passes a bucket graph whose labels keep changing for up to 11 rounds: a
+# margin of 4 rounds over sf0.1.
+COMPONENTS_ORACLE_ROUNDS = 12
 
 
 def _components_oracle(rounds: int = COMPONENTS_ORACLE_ROUNDS) -> str:
@@ -489,15 +494,12 @@ def _components_oracle(rounds: int = COMPONENTS_ORACLE_ROUNDS) -> str:
     half-step the Spark loop runs (bucket label = min member label, doc
     label = min bucket label), idempotent at the fixpoint, so Spark's
     early exit and the fixed unroll agree whenever convergence lands
-    inside the bound. Measured convergence: 4 effective rounds at both
-    SFs when added (r6); 7 rounds at sf0.1 since the r9 minhash geometry
-    cut (4→3 bands) grew the bucket-graph diameter — the remaining
-    margin is ONE round (see the loop-bound warning in
-    llm_dedup_components; raising the bound and this constant together
-    is flagged to the next build round). Convergence inside the bound is
-    asserted in tests (last two rounds identical); <1 s in DuckDB at
-    sf0.1 — the round-5 sweep exclusion was the RECURSIVE closure's
-    cost, not the propagation's."""
+    inside the bound. Measured convergence and its margin are stated at
+    COMPONENTS_ORACLE_ROUNDS (sf0.1 needs 7 rounds since the r9 minhash
+    geometry cut, 4→3 bands, grew the bucket-graph diameter).
+    Convergence inside the bound is asserted in tests (last two rounds
+    identical); <1 s in DuckDB at sf0.1 — the round-5 sweep exclusion
+    was the RECURSIVE closure's cost, not the propagation's."""
     parts = [
         "m0 AS MATERIALIZED (SELECT doc_id, band, bucket FROM banded)",
         "l0 AS MATERIALIZED (SELECT DISTINCT doc_id, doc_id AS lbl FROM m0)",
@@ -536,7 +538,7 @@ def _components_oracle(rounds: int = COMPONENTS_ORACLE_ROUNDS) -> str:
         "hash-verifiable: the oracle computes the same buckets and runs "
         f"{COMPONENTS_ORACLE_ROUNDS} unrolled rounds of the SAME "
         "bucket-fold half-step (measured fixpoint: 4 rounds at sf0.01 "
-        "and sf0.1; the distributed loop is the 100 TB path)."
+        "and 7 at sf0.1; the distributed loop is the 100 TB path)."
     ),
 )
 def llm_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -584,15 +586,12 @@ def llm_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels: DataFrame | None = None
     prev_sum = None
     converged = False
-    # Diameter bound. MARGIN WARNING (r11 measurement): the fixture now
-    # converges in 7 of the 8 bounded rounds — the r9 minhash geometry
-    # cut (4→3 bands) grew the bucket-graph diameter (per-round label
-    # sums: 280630, 91395, 77506, 76506, 74502, 72595, 72220, 72220).
-    # A slightly deeper corpus fires the loud non-convergence guard.
-    # The bound is COMPONENTS_ORACLE_ROUNDS, the same constant the
-    # declared oracle text unrolls; raising it edits the oracle — a
-    # BUILD-round change, flagged in OPTIMIZATION_r11.md/r12.md; an
-    # optimization round must not edit the oracle.
+    # Diameter bound: COMPONENTS_ORACLE_ROUNDS, the same constant the
+    # declared oracle text unrolls. At sf0.1 the labels change for 7
+    # rounds and the 8th confirms the fixpoint (per-round label sums:
+    # 280630, 91395, 77506, 76506, 74502, 72595, 72220, 72220); at sf0.01
+    # 4 rounds change and the 5th confirms. A corpus whose labels keep
+    # changing for all 12 rounds fires the loud non-convergence guard.
     for _ in range(COMPONENTS_ORACLE_ROUNDS):
         if labels is None:
             # Iteration 1: every label IS its doc_id, so the bucket

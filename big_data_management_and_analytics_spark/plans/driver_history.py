@@ -118,6 +118,9 @@ REVERIFY_FIRST: dict[str, int] = {
         win_pct_cume""".split(),
         13,
     ),
+    # r13: COMPONENTS_ORACLE_ROUNDS 8 -> 12 changes both the loop bound
+    # and the declared oracle text (output is the same unique fixpoint).
+    "llm_dedup_components": 13,
 }
 
 

@@ -5,9 +5,22 @@ Two paths:
 - ``get_spark()`` builds our own local session (tests, bench) with the full
   config set at build time.
 - ``tune(spark)`` applies the *runtime-settable* subset to a session we did
-  not build (the driver's). Verified this session: ``spark.sql.legacy.parquet.
+  not build (the driver's). Verified: ``spark.sql.legacy.parquet.
   nanosAsLong``, session timezone, and Arrow flags are all settable via
-  ``spark.conf.set`` on a running session (SURVEY.md §0 P1).
+  ``spark.conf.set`` on a running session (SURVEY.md §0 P1). Static confs
+  are not: they are fixed when the JVM's first session is built, and
+  ``spark.conf.set`` on one raises CANNOT_MODIFY_STATIC_CONFIG.
+
+Generated-class cache. Spark compiles each generated Java source (whole-stage
+and expression codegen) once and keeps the class in one JVM-wide LRU cache
+of ``spark.sql.codegen.cache.maxEntries`` classes (default 100). A pass that
+cycles over more distinct classes than the cache holds evicts each class
+before it comes round again, so every pass recompiles all of them: one
+perfbench ``tpch_olap`` or ``llm_pipeline`` pass generates 156 distinct
+classes and recompiled ~150 on every warm pass at 100 entries, none at
+``CODEGEN_CACHE_ENTRIES``. The size is a static conf, so only ``get_spark``
+can set it; a session built elsewhere (the driver's) keeps Spark's 100 and
+``tune`` leaves it there.
 
 Scale posture: shuffle partitions default to a small count for local sf≤0.1
 runs but are env-overridable (``SPARK_GRAFT_SHUFFLE_PARTITIONS``); on a real
@@ -40,6 +53,16 @@ _RUNTIME_CONF = {
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
     ),
 }
+
+
+# Capacity of Spark's generated-class cache (static conf
+# ``spark.sql.codegen.cache.maxEntries``, default 100; 0 turns the cache
+# off). Measured on a 4-core host with an unbounded cache: one session over
+# bench.py's 26-id headline suite (sf0.1, then sf0.01) and the three
+# perfbench workloads generates 691 distinct classes; one perfbench pass
+# alone generates 156 (tpch_olap, llm_pipeline) or 73 (etl_sinks). 2048 is
+# the next power of two above twice the 691.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 # SparkContexts that already received the package zip (by applicationId).
@@ -122,6 +145,7 @@ def get_spark(app_name: str = "bdma-spark") -> SparkSession:
         # item 2): stage progress bars are pure capture noise here.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

@@ -5454,7 +5454,8 @@ def test_components_oracle_converges_inside_unroll_bound(sf):
     recursive closure) must reach its fixpoint INSIDE the unroll bound:
     rounds-1 and rounds emit identical labels, so Spark's early-exit
     loop and the fixed unroll agree (the graph_kcore argument).
-    Measured fixpoint is 4 rounds at sf0.01 and sf0.1; the bound is 8.
+    Measured fixpoint is 4 rounds at sf0.01 and 7 at sf0.1; the bound
+    is COMPONENTS_ORACLE_ROUNDS (12).
     Runs at BOTH sweep scales (VERDICT r7 item 5): the engine loop and
     the oracle share the bound, so differential testing is structurally
     blind to a joint unconverged state — this test plus the engine's

@@ -214,11 +214,15 @@ def main() -> int:
         action="store_true",
         help="Rehearse the EXACT per-round driver contract instead of the "
         "engine registry: a hostile-config vanilla SparkSession (non-UTC "
-        "timezone, inferTimestampNTZ on, default 200 shuffle partitions, "
-        "zero engine confs) runs the callables from "
+        "timezone, inferTimestampNTZ on, zero engine confs at build) runs "
+        "the callables from "
         "__spark_entry__.queries() and compares them against "
         "__spark_entry__.oracle_sql() on DuckDB — the surface "
-        "CORRECTNESS_r{N}.json is produced from. Previous rounds ran this "
+        "CORRECTNESS_r{N}.json is produced from. As on the real driver, "
+        "the first table load runs sources.session.tune(), which sets the "
+        "runtime confs: UTC, NTZ inference off, and 32 shuffle partitions "
+        "(or $SPARK_GRAFT_SHUFFLE_PARTITIONS); static confs such as the "
+        "codegen cache size stay at Spark's defaults. Previous rounds ran this "
         "ad-hoc on the 50-id queue prefix; as a flag it can certify the "
         "full registry ahead of driver rotation.",
     )
