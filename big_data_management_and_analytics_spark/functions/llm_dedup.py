@@ -162,8 +162,7 @@ def llm_dedup_near_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serialize the O(n²) comparison onto a single task. Repartition the
     # streamed side so the quadratic work spreads across the cluster —
     # O(n²/p) per task — and broadcast the other side explicitly.
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    a = toks.repartition(n_parts, "doc_id").alias("a")
+    a = spread(toks, "doc_id").alias("a")
     b = toks.alias("b")
     inter = F.size(F.array_intersect(F.col("a.tok"), F.col("b.tok")))
     union = F.size(F.col("a.tok")) + F.size(F.col("b.tok")) - inter

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import pandas_udf
 
 from big_data_management_and_analytics_spark.plans.registry import register
-from big_data_management_and_analytics_spark.sources.io import load
+from big_data_management_and_analytics_spark.sources.io import load, local_frame
 
 
 def dot(a, b):
@@ -754,20 +754,10 @@ def llm_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     if v[pivot] < 0:
         v = -v
     share = float(vals[-1] / np.trace(C))
-    # Arrow-path local relation (pandas input): the 64-row result
-    # becomes a LocalTableScan instead of a defaultParallelism-sliced
-    # parallelized job — measured 0.38 s -> 0.07 s on the terminal
-    # write at local[32]. (coalesce(1) on the list form is a trap: it
-    # hit a ~5 s scheduling pathology, measured r6.)
-    pdf = pd.DataFrame(
-        {
-            "dim": np.arange(1, dims + 1, dtype="int32"),
-            "loading": [round(float(v[i]), 6) for i in range(dims)],
-            "explained_share": [round(share, 6)] * dims,
-        }
-    )
-    return spark.createDataFrame(
-        pdf, "dim int, loading double, explained_share double"
+    return local_frame(
+        spark,
+        [(i + 1, round(float(v[i]), 6), round(share, 6)) for i in range(dims)],
+        "dim int, loading double, explained_share double",
     )
 
 
@@ -877,7 +867,8 @@ def llm_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("cell")
         .parquet(f"{base}/assignments")
     )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, [float(x) for x in row]) for i, row in enumerate(cent)],
         "cell int, centroid array<double>",
     ).write.mode("overwrite").parquet(f"{base}/centroids")

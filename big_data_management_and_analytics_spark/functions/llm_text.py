@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from big_data_management_and_analytics_spark.functions.strings import SQL_TOKENS, tokens
 from big_data_management_and_analytics_spark.plans.registry import register
-from big_data_management_and_analytics_spark.sources.io import load, spread
+from big_data_management_and_analytics_spark.sources.io import load, local_frame, spread
 
 
 @register(
@@ -809,14 +809,9 @@ def llm_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense = [0] * _BLOOM_BLOCKS
     for r in blocks:
         dense[r["block"]] = r["bits"]
-    # Arrow-path local relation (pandas input): one row carrying the
-    # 16K-word filter becomes a LocalTableScan, so the broadcast needs
-    # no parallelize job (same pattern as llm_embed_pca's tail, r6).
-    import pandas as _pd
-
-    bloom = spark.createDataFrame(
-        _pd.DataFrame({"bloom": [dense]}), "bloom array<long>"
-    )
+    # One row carrying the 16K-word filter, as a LocalTableScan: the
+    # broadcast needs no parallelize job.
+    bloom = local_frame(spark, [(dense,)], "bloom array<long>")
 
     # Probe: a gram hits iff all k probed bits are set.
     hit = F.expr(_BLOOM_HIT_SQL)

@@ -27,7 +27,11 @@ from big_data_management_and_analytics_spark.functions.portable_hash import (
     sql_mix,
 )
 from big_data_management_and_analytics_spark.plans.registry import register
-from big_data_management_and_analytics_spark.sources.io import load, register_views
+from big_data_management_and_analytics_spark.sources.io import (
+    load,
+    local_frame,
+    register_views,
+)
 
 PIVOT_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -811,7 +815,8 @@ def obs_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("value") > 0)
     cleaned.write.format("noop").mode("overwrite").save()
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(m["rows_in"]),

@@ -23,7 +23,7 @@ from big_data_management_and_analytics_spark.plans.determinism import (
     money_sum_fast,
 )
 from big_data_management_and_analytics_spark.plans.registry import register
-from big_data_management_and_analytics_spark.sources.io import load, spread
+from big_data_management_and_analytics_spark.sources.io import load, local_frame, spread
 
 
 @register(
@@ -774,8 +774,8 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()
     )
-    return spark.createDataFrame(
-        rows, schema="o_orderpriority string, n_lines long, total_price double"
+    return local_frame(
+        spark, rows, "o_orderpriority string, n_lines long, total_price double"
     )
 
 

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from big_data_management_and_analytics_spark.plans.determinism import cents, money_sum_fast
 from big_data_management_and_analytics_spark.plans.registry import register
-from big_data_management_and_analytics_spark.sources.io import load
+from big_data_management_and_analytics_spark.sources.io import load, local_frame
 
 
 def _pround6(col):
@@ -3111,8 +3111,10 @@ def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("xc").over(w_all).alias("s"),
     )
     trig = F.broadcast(
-        daily.sparkSession.createDataFrame(
-            TRIG_TABLE, "period int, phase int, cosv double, sinv double"
+        local_frame(
+            daily.sparkSession,
+            TRIG_TABLE,
+            "period int, phase int, cosv double, sinv double",
         )
     )
     dev = F.col("xc").cast("double") - F.col("s").cast("double") / F.col("n")

@@ -121,6 +121,31 @@ REVERIFY_FIRST: dict[str, int] = {
     # r13: COMPONENTS_ORACLE_ROUNDS 8 -> 12 changes both the loop bound
     # and the declared oracle text (output is the same unique fixpoint).
     "llm_dedup_components": 13,
+    # r13: spread() runs at min(shuffle partitions, defaultParallelism) and
+    # driver-built frames became Arrow-path LocalTableScans. The list is
+    # every oracle-tier id whose executed plans at tier-1 settings (8
+    # shuffle partitions, local[4], sf0.01) differ from the parent's; the
+    # four such ids already listed above are not repeated.
+    **dict.fromkeys(
+        """join_fuzzy_editdist join_runtime_bloom llm_bigram_kn
+        llm_blocklist_filter llm_bm25_search llm_bpe_encode
+        llm_bpe_pairs llm_containment_join llm_contamination
+        llm_contamination_bloom llm_corpus_temperature
+        llm_dataset_card llm_decontaminate llm_dedup_cluster_stats
+        llm_dedup_incremental llm_dedup_minhash llm_dedup_shingle
+        llm_dedup_simhash llm_dedup_substring
+        llm_dedup_substring_rewrite llm_fingerprint_winnow
+        llm_hybrid_rrf llm_index_persist llm_inverted_index
+        llm_keyword_rake llm_lsh_tuning llm_minhash_accuracy
+        llm_nb_langid llm_ngram_novelty llm_oov_rate llm_pii_redact
+        llm_prefix_cache_sim llm_quality_gopher llm_rouge_l
+        llm_text_ngram llm_text_perplexity llm_text_readability
+        llm_text_tfidf llm_text_unigram_lm llm_text_wordcount
+        llm_vocab_growth llm_watermark_greenlist llm_word_pmi
+        obs_metrics sink_compaction str_split_explode
+        stream_checkpoint_resume ts_periodogram""".split(),
+        13,
+    ),
 }
 
 

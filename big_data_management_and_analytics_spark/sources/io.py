@@ -13,31 +13,12 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from big_data_management_and_analytics_spark.sources.session import tune
-
-# Diagnostic override for A/B-measuring candidate spread() sites against
-# a multi-file fixture (SPARK_GRAFT_SPREAD_SKIP=force treats every site
-# as skip_when_split=True). NOT a production setting: skipping the
-# exchange at a multi-consumer site re-runs scan+tokenize once per
-# consumer (llm_dedup_ssjoin measured 9 -> 111 s, r7), which is why
-# per-site opt-in is the shipped behavior. Read ONCE at import and
-# warned about loudly, so a setting leaked into a bench/CI environment
-# is visible instead of silently re-shaping every plan (ADVICE r7).
-_SPREAD_SKIP_FORCE = os.environ.get("SPARK_GRAFT_SPREAD_SKIP") == "force"
-if _SPREAD_SKIP_FORCE:
-    import warnings
-
-    warnings.warn(
-        "SPARK_GRAFT_SPREAD_SKIP=force is active: every spread() site "
-        "behaves as skip_when_split=True. Diagnostic A/B mode only — "
-        "multi-consumer pipelines will re-run their upstream per "
-        "consumer.",
-        stacklevel=2,
-    )
 
 TABLES = (
     "region",
@@ -198,6 +179,24 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return df
 
 
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """Rows built on the driver as an Arrow-path local relation.
+
+    ``spark.createDataFrame(<list>, schema)`` plans as ``Scan ExistingRDD``,
+    a pickled RDD sliced over ``defaultParallelism`` tasks and run as a job
+    on every materialization; a pandas input crosses through Arrow and
+    plans as ``LocalTableScan`` with the same rows (a two-row frame's
+    build + noop write measured 0.48 → 0.07 s, 4-core host). Columns are
+    object dtype so Arrow converts the Python values themselves: a long
+    stays exact and None stays null instead of becoming a float NaN. An
+    empty ``rows`` takes Spark's list path (Arrow is skipped for it)."""
+    names = T._parse_datatype_string(schema).names
+    pdf = pd.DataFrame(
+        {n: pd.Series([r[i] for r in rows], dtype=object) for i, n in enumerate(names)}
+    )
+    return spark.createDataFrame(pdf, schema)
+
+
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
     """Register every fixture table as a temp view (SQL entry point)."""
     for t in tables:
@@ -214,6 +213,21 @@ def spread(df: DataFrame, *keys: str, skip_when_split: bool = False) -> DataFram
     correct for shuffle bytes, wrong when the cost is downstream CPU per
     row.
 
+    Width: ``min(spark.sql.shuffle.partitions, defaultParallelism)``, one
+    task per slot that will run the work; the shuffle width stays the
+    upper bound. The explicit count is never coalesced by AQE, and its
+    hash partitioning on the key also satisfies every downstream
+    aggregate and join on that key, so those stages run at this width
+    too. Measured on a 4-core host over one warm noop pass of perfbench's
+    ``llm_pipeline`` ids at sf0.01: sized to the shuffle width (32), 16
+    of its 54 completed stages ran 32 tasks each, 553 tasks in all with
+    7.2 s of executor run time and 1.5 s of deserialization; at the slot
+    count it runs 105 tasks, 4.5 s and 0.4 s, and the perfbench warm
+    pass median went 8.60 → 7.39 s (10 interleaved pairs).
+    Cluster caveat: under dynamic allocation ``defaultParallelism``
+    counts only the executors already registered (at least 2), so set
+    Spark's own ``spark.default.parallelism`` to the slot count there.
+
     ``skip_when_split``: when the input ALREADY has at least that many
     files (the production layout — at 100 TB every table is thousands of
     files), the exchange is pure cost for a SINGLE-consumer chain: the
@@ -225,14 +239,18 @@ def spread(df: DataFrame, *keys: str, skip_when_split: bool = False) -> DataFram
     consumer (measured 9 → 111 s at a 64-file sf0.1 copy). So the skip
     is strictly OPT-IN for call sites whose spread output feeds one
     linear chain (or is immediately re-anchored by a checkpoint), each
-    A/B-measured on a ≥shuffle-width multi-file fixture. Values are
+    A/B-measured on a ≥width multi-file fixture. Values are
     partitioning-independent by the engine's determinism rules
     (certified across widths 32/7 and file layouts — SCALE.md), so the
     skip can only change the plan, never the result. inputFiles() reads
     the already-built file index (no job); non-file inputs (streaming,
     local relations) fall through to the repartition."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if skip_when_split or _SPREAD_SKIP_FORCE:
+    spark = df.sparkSession
+    n = min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
+    if skip_when_split:
         try:
             if len(df.inputFiles()) >= n:
                 return df

@@ -18,7 +18,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from big_data_management_and_analytics_spark.plans.determinism import money_sum_fast
 from big_data_management_and_analytics_spark.plans.registry import register
-from big_data_management_and_analytics_spark.sources.io import SCHEMAS, load, register_views
+from big_data_management_and_analytics_spark.sources.io import (
+    SCHEMAS,
+    load,
+    local_frame,
+    register_views,
+)
 
 
 @register(
@@ -315,12 +320,10 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             .count(),
         )
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
-        schema=(
-            "n_rows long, n_files_before long, n_rows_after long, "
-            "n_files_after long"
-        ),
+        "n_rows long, n_files_before long, n_rows_after long, n_files_after long",
     )
 
 

@@ -25,6 +25,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from big_data_management_and_analytics_spark.plans.registry import register
+from big_data_management_and_analytics_spark.sources.io import local_frame
 from big_data_management_and_analytics_spark.sources.session import tune
 from big_data_management_and_analytics_spark.streaming.batch_twins import (
     DEDUP_ORACLE,
@@ -509,7 +510,7 @@ def stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(sink, ignore_errors=True)
     results.append(("foreach_batch_parquet", n_sink))
 
-    return spark.createDataFrame(results, schema="mode string, n_rows long")
+    return local_frame(spark, results, "mode string, n_rows long")
 
 
 @register(
@@ -647,4 +648,4 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for d in (src, sink, ckpt):
         shutil.rmtree(d, ignore_errors=True)
-    return spark.createDataFrame(rows, schema="event_type string, n_events long")
+    return local_frame(spark, rows, "event_type string, n_events long")

@@ -212,18 +212,29 @@ def _reset_memos() -> None:
     llm_corpus._CHAIN_MEMO.clear()
 
 
+def _spread_width(spark) -> int:
+    from big_data_management_and_analytics_spark.sources.io import spread
+
+    return spread(spark.range(1), "id").rdd.getNumPartitions()
+
+
 @pytest.mark.parametrize("name", SENSITIVE)
 def test_shuffle_partition_invariance(spark, registry, name):
     q = registry[name]
     spark.conf.set("spark.sql.shuffle.partitions", "3")
+    w3 = _spread_width(spark)
     _reset_memos()
     h3 = _canon_hash(q.fn(spark, SF_T2))
     spark.conf.set("spark.sql.shuffle.partitions", "17")
+    w17 = _spread_width(spark)
     _reset_memos()
     h17 = _canon_hash(q.fn(spark, SF_T2))
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     _reset_memos()
     assert h3 == h17, f"{name} result depends on partitioning"
+    # spread() is capped at the slot count: the two settings vary its
+    # partitioning too whenever the host has more than 3 slots.
+    assert w3 != w17 or spark.sparkContext.defaultParallelism <= 3, (w3, w17)
 
 
 AQE_PROBE = [

@@ -176,33 +176,45 @@ def test_hive_dynamic_partition_pruning_engages(spark, hive_dir):
     assert touched and all("l_returnflag=R" in p for p in touched), touched
 
 
-def test_spread_skip_when_split_semantics(spark, mf_dir, monkeypatch):
+def test_spread_skip_when_split_semantics(spark, mf_dir):
     """spread(skip_when_split=True) must return the input UNCHANGED when
-    the scan already has >= shuffle-width files (production layout: the
+    the scan already has >= spread-width files (production layout: the
     raw-column exchange is the pipeline's largest shuffle, and the file
     splits already provide the parallelism), must still repartition when
     files < width, and must NEVER skip by default — the exchange is the
     ReuseExchange sharing anchor for multi-consumer pipelines (skipping
     it in llm_dedup_ssjoin re-ran tokenize once per consumer: 9 -> 111 s
     measured at a 64-file sf0.1 copy, r7)."""
-    from big_data_management_and_analytics_spark.sources import io
     from big_data_management_and_analytics_spark.sources.io import load, spread
 
-    # Isolate from a leaked diagnostic env setting: the force knob is
-    # read once at import into this module flag (ADVICE r7), so pin the
-    # flag itself — the default-never-skip assertion below is exactly
-    # what a leaked SPARK_GRAFT_SPREAD_SKIP=force would break.
-    monkeypatch.setattr(io, "_SPREAD_SKIP_FORCE", False)
-
-    df = load(spark, mf_dir, "lineitem")  # 4 part files (module fixture)
+    multi = load(spark, mf_dir, "lineitem")  # 4 part files (module fixture)
+    single = load(spark, SF_SMALL, "lineitem")  # one file
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        assert spread(df, "l_orderkey", skip_when_split=True) is df
+        spark.conf.set("spark.sql.shuffle.partitions", "4")  # width <= 4
+        assert spread(multi, "l_orderkey", skip_when_split=True) is multi
         spark.conf.set("spark.sql.shuffle.partitions", "64")
-        assert spread(df, "l_orderkey", skip_when_split=True) is not df
+        assert spark.sparkContext.defaultParallelism > 1  # width > 1 file
+        assert spread(single, "l_orderkey", skip_when_split=True) is not single
         spark.conf.set("spark.sql.shuffle.partitions", "4")
-        assert spread(df, "l_orderkey") is not df  # default: never skip
+        assert spread(multi, "l_orderkey") is not multi  # default: never skip
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_spread_width_is_task_slots(spark):
+    """spread() runs one task per slot: min(shuffle width, defaultParallelism).
+    The shuffle width stays an upper bound below the slot count."""
+    from big_data_management_and_analytics_spark.sources.io import load, spread
+
+    df = load(spark, SF_SMALL, "documents")
+    slots = spark.sparkContext.defaultParallelism
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for width in (2, 64):
+            spark.conf.set("spark.sql.shuffle.partitions", str(width))
+            got = spread(df, "doc_id").rdd.getNumPartitions()
+            assert got == min(width, slots), (width, slots, got)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 

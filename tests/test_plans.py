@@ -376,6 +376,18 @@ def test_near_exact_parallelizes_nested_loop(spark, registry):
     assert "hashpartitioning(doc_id" in plan, "streamed side not repartitioned"
 
 
+def test_local_frame_is_arrow_local_relation(spark):
+    """Driver-built frames plan as LocalTableScan (no parallelize job per
+    materialization), and the Arrow conversion keeps a long above 2^53
+    exact and None as null."""
+    from big_data_management_and_analytics_spark.sources.io import local_frame
+
+    rows = [(2**62 + 1, None, "x", [1.5]), (3, 2.5, None, None)]
+    df = local_frame(spark, rows, "a long, b double, c string, d array<double>")
+    assert "LocalTableScan" in _plan(df)
+    assert [tuple(r) for r in df.collect()] == rows
+
+
 def test_unigram_lm_broadcasts_vocab(spark, registry):
     """The vocabulary join must broadcast (Zipf-bounded dim side), never
     shuffle the exploded corpus on the token key a second time."""

@@ -7,16 +7,14 @@ bit is a reported mismatch — stricter than any reasonable driver hash.
 
 Usage:
     python tools/check.py [--sf /root/testdata/sf0.01] [name ...]
-    python tools/check.py --sf /root/testdata/sf0.1 --skip-heavy-oracles
+    python tools/check.py --sf <sf0.1 fixture dir>
     python tools/check.py --list
 
---skip-heavy-oracles drops the ids whose DUCKDB side is prohibitive at
-sf0.1 (none since round 6 — llm_dedup_components' recursive closure,
-the last entry, was replaced by a bounded unrolled label-propagation
-oracle) — the round-5 10x sweep ran every other oracle-tier id,
-including the 112M-pair near-exact oracle (~10 min) and the 5.1M-row
-ssjoin output (~4 min), and caught three cross-engine rounding bugs the
-sf0.01 fixtures never tripped. Run it after any change to float math.
+The sf0.1 sweep runs every oracle-tier id, including the 112M-pair
+near-exact oracle (~7 min) and the 5.1M-row ssjoin oracle, whose DuckDB
+side alone peaks near 14 GB; the round-5 10x sweep caught three
+cross-engine rounding bugs the sf0.01 fixtures never tripped. Run it
+after any change to float math.
 """
 
 from __future__ import annotations
@@ -185,21 +183,11 @@ def compare(name: str, spark_pd: pd.DataFrame, duck_pd: pd.DataFrame) -> list[st
     return issues
 
 
-# Oracle-cost-prohibitive ids at sf >= 0.1 (the ENGINE side is fine —
-# these would still run in bench.py at sf0.1 every round; it is the
-# DuckDB oracle that explodes). EMPTY since round 6: the one entry
-# (llm_dedup_components' recursive-CTE transitive closure) was replaced
-# by a bounded unrolled MATERIALIZED-CTE label propagation that runs in
-# <1 s at sf0.1 — the full oracle-tier registry now sweeps at sf0.1.
-HEAVY_ORACLES: tuple[str, ...] = ()
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--list", action="store_true")
     ap.add_argument("--category", default=None)
-    ap.add_argument("--skip-heavy-oracles", action="store_true")
     ap.add_argument(
         "--new-id-gate",
         action="store_true",
@@ -207,7 +195,11 @@ def main() -> int:
         "differential sweep at BOTH shuffle-partition widths (32 and 7) "
         "by re-invoking this script in subprocesses (the width is a "
         "session-construction conf). Nonzero exit on any miss. "
-        "Required before REGISTERING any new oracle-tier id.",
+        "Required before REGISTERING any new oracle-tier id. spread() "
+        "runs at min(width, defaultParallelism), so on a host with 7 or "
+        "fewer cores both widths give the same spread width; tier-1's "
+        "3-vs-17 test_shuffle_partition_invariance covers spread-width "
+        "invariance.",
     )
     ap.add_argument(
         "--driver-surface",
@@ -319,11 +311,6 @@ def main() -> int:
     names = args.names or sorted(qs)
     if args.category:
         names = [n for n in names if qs[n].category == args.category]
-    if args.skip_heavy_oracles:
-        skipped = [n for n in names if n in HEAVY_ORACLES]
-        names = [n for n in names if n not in HEAVY_ORACLES]
-        if skipped:
-            print(f"skipping heavy oracles: {' '.join(skipped)}")
 
     from big_data_management_and_analytics_spark.sources.session import get_spark
 
