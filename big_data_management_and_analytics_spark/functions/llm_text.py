@@ -672,10 +672,9 @@ _BLOOM_K = 5
 # because the probe needs shiftleft by an *expression*, which the classic
 # pyspark ``F.shiftleft`` (int-only shift) can't build. The two base
 # hashes are hoisted into h1/h2 COLUMNS before the per-probe expressions
-# run — inside a lambda Catalyst cannot common-subexpression-eliminate,
-# so inlining the base hash would evaluate it 2k times per gram instead
-# of 2. The hash basis is the engine-portable md5 pair (portable_hash.py)
-# so the DuckDB oracle reproduces the filter bit-for-bit.
+# run, so each gram hashes twice, not 2k times. The hash basis is the
+# engine-portable md5 pair (portable_hash.py) so the DuckDB oracle
+# reproduces the filter bit-for-bit.
 _BLOOM_H1_SQL = (
     f"pmod(cast(conv(substring(md5({{gram}}), 1, 15), 16, 10) as bigint),"
     f" {_BLOOM_BITS})"
@@ -685,19 +684,20 @@ _BLOOM_H2_SQL = (
     f" {_BLOOM_BITS})"
 )
 
-# Positions from the hoisted h1/h2 columns.
-_BLOOM_POS_SQL = (
-    f"transform(sequence(0, {_BLOOM_K - 1}), i -> "
-    f"pmod(h1 + i * h2, {_BLOOM_BITS}))"
-)
+# The k positions from the hoisted h1/h2 columns, unrolled into k
+# expressions. A lambda form (transform/aggregate over sequence(0, k-1))
+# would be CodegenFallback in Spark 4.1: every gram would go through the
+# interpreter inside an otherwise whole-stage-codegen'd stage.
+_BLOOM_POS = [f"pmod(h1 + {i} * h2, {_BLOOM_BITS})" for i in range(_BLOOM_K)]
 
-# True iff every probed bit of the broadcast `bloom` array is set.
-_BLOOM_HIT_SQL = (
-    f"aggregate({_BLOOM_POS_SQL}, true, (acc, pos) -> "
-    f"acc AND (element_at(bloom, CAST(pos DIV {_BLOOM_WORD} AS INT) + 1)"
-    f" & shiftleft(CAST(1 AS BIGINT), CAST(pmod(pos, {_BLOOM_WORD}) AS INT)))"
-    " != 0)"
-)
+
+def _bloom_bit_set(pos: str) -> str:
+    """True iff bit ``pos`` of the broadcast ``bloom`` block array is set."""
+    return (
+        f"(element_at(bloom, CAST({pos} DIV {_BLOOM_WORD} AS INT) + 1)"
+        f" & shiftleft(CAST(1 AS BIGINT), CAST(pmod({pos}, {_BLOOM_WORD}) AS INT)))"
+        " != 0"
+    )
 
 
 def _bloom_oracle() -> str:
@@ -795,7 +795,7 @@ def llm_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Build: gram → k positions → (block, bit) → bit_or per block.
     blocks = (
         _with_bloom_hashes(eval_grams)
-        .select(F.explode(F.expr(_BLOOM_POS_SQL)).alias("pos"))
+        .select(F.expr(f"explode(array({', '.join(_BLOOM_POS)}))").alias("pos"))
         .select(
             F.expr(f"CAST(pos DIV {_BLOOM_WORD} AS INT)").alias("block"),
             F.expr(
@@ -814,7 +814,7 @@ def llm_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom = local_frame(spark, [(dense,)], "bloom array<long>")
 
     # Probe: a gram hits iff all k probed bits are set.
-    hit = F.expr(_BLOOM_HIT_SQL)
+    hit = F.expr(" AND ".join(_bloom_bit_set(p) for p in _BLOOM_POS))
     train_grams = _with_bloom_hashes(
         _explode_grams(grams.filter(F.col("doc_id") % 50 != 0), "doc_id")
     )

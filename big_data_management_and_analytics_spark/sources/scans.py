@@ -299,27 +299,22 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Fragmented ingest: 64 writer tasks → 64 small files.
     li.repartition(64).write.mode("overwrite").parquet(frag_dir)
 
+    def rows_and_files(df: DataFrame) -> tuple[int, int]:
+        # One aggregate job per side: row count and physical file count.
+        return tuple(
+            df.agg(
+                F.count(F.lit(1)), F.count_distinct(F.col("_metadata.file_path"))
+            ).first()
+        )
+
     frag = spark.read.parquet(frag_dir)
-    n_rows = frag.count()
-    files_before = (
-        frag.select(F.col("_metadata.file_path").alias("f")).distinct().count()
-    )
+    n_rows, files_before = rows_and_files(frag)
     # Compact: bin-pack to ~200k rows per file (schema-fixed row→byte
     # proxy; a real table would target ~128 MiB the same way).
     n_out = max(1, math.ceil(n_rows / 200_000))
     frag.repartition(n_out).write.mode("overwrite").parquet(compact_dir)
 
-    compacted = spark.read.parquet(compact_dir)
-    rows = [
-        (
-            n_rows,
-            files_before,
-            compacted.count(),
-            compacted.select(F.col("_metadata.file_path").alias("f"))
-            .distinct()
-            .count(),
-        )
-    ]
+    rows = [(n_rows, files_before, *rows_and_files(spark.read.parquet(compact_dir)))]
     return local_frame(
         spark,
         rows,

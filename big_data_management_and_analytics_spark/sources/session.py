@@ -22,9 +22,24 @@ classes and recompiled ~150 on every warm pass at 100 entries, none at
 can set it; a session built elsewhere (the driver's) keeps Spark's 100 and
 ``tune`` leaves it there.
 
+DataFrame call-site capture. PySpark records the Python call site of every
+Column and functions call (``spark.python.sql.dataFrameDebugging.enabled``,
+default true) so that a runtime error can name the user line that built the
+failing expression (the "DataFrame query context"). Each such call then also
+walks the Python stack and sends ``getActiveSession``, a conf read and a
+``PySparkCurrentOrigin`` set and clear over py4j. ``get_spark`` turns it off
+(``CALL_SITE_CAPTURE``): one warm build of the seven perfbench
+``llm_pipeline`` ids sends 3,145 py4j commands instead of 9,098. What is given
+up is that query context in runtime error messages; errors still raise with
+the same error class. The conf is static and PySpark reads it once per
+process, so a session built elsewhere (the driver's) keeps capture on and
+``tune`` cannot change that.
+
 Scale posture: shuffle partitions default to a small count for local sf≤0.1
 runs but are env-overridable (``SPARK_GRAFT_SHUFFLE_PARTITIONS``); on a real
-cluster AQE coalescing makes the static number mostly irrelevant.
+cluster AQE coalescing makes the static number mostly irrelevant. ``tune``
+pins the width only over Spark's default of 200, so a width the caller set
+stays.
 """
 
 from __future__ import annotations
@@ -32,6 +47,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_SHUFFLE_KEY = "spark.sql.shuffle.partitions"
+# Spark's own default width. A session that still reads it has no width
+# chosen by anyone; any other value was set on purpose and tune() keeps it.
+_SHUFFLE_DEFAULT = "200"
 
 # Settings that are safe (and required) to set on a running session.
 _RUNTIME_CONF = {
@@ -48,10 +68,9 @@ _RUNTIME_CONF = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Local-mode shuffle sizing: the 200-partition default turns streaming
     # state stages into 200 tiny tasks at test scale. AQE coalesces batch
-    # shuffles anyway; stateful streaming does not, so pin it here.
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
-    ),
+    # shuffles anyway; stateful streaming does not, so pin it here (tune()
+    # pins it only over Spark's default; see _SHUFFLE_DEFAULT).
+    _SHUFFLE_KEY: os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),
 }
 
 
@@ -63,6 +82,16 @@ _RUNTIME_CONF = {
 # alone generates 156 (tpch_olap, llm_pipeline) or 73 (etl_sinks). 2048 is
 # the next power of two above twice the 691.
 CODEGEN_CACHE_ENTRIES = 2048
+
+
+# PySpark's DataFrame call-site capture (static conf
+# ``spark.python.sql.dataFrameDebugging.enabled``, default true). Measured on
+# a 4-core host over perfbench's seven llm_pipeline ids at sf0.01: one warm
+# build of each sends 9,098 py4j commands with it on and 3,145 with it off;
+# traced build.self_s 1.86 -> 1.27 s. Together with the unrolled bloom probe
+# the warm pass median fell 6.94 -> 5.99 s and 6.40 -> 5.33 s in two sets of
+# 10 interleaved pairs.
+CALL_SITE_CAPTURE = "false"
 
 
 # SparkContexts that already received the package zip (by applicationId).
@@ -120,9 +149,16 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable config to an externally-owned session."""
+    """Apply runtime-settable config to an externally-owned session.
+
+    Every key is re-pinned on each call, except the shuffle width: it is
+    pinned only while the session still reads Spark's default, so a width
+    the caller chose (a test's 3, a driver's own sizing) survives every
+    later ``load()`` and live streaming build."""
     for k, v in _RUNTIME_CONF.items():
         try:
+            if k == _SHUFFLE_KEY and spark.conf.get(k) != _SHUFFLE_DEFAULT:
+                continue
             spark.conf.set(k, v)
         except Exception:
             pass  # already-set static conf; keep going
@@ -146,6 +182,7 @@ def get_spark(app_name: str = "bdma-spark") -> SparkSession:
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", CALL_SITE_CAPTURE)
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

@@ -3,6 +3,8 @@ whole-stage codegen — the scale-posture checks the 100 TB design relies on."""
 
 from __future__ import annotations
 
+import re
+
 from tests.conftest import SF_T2
 
 
@@ -891,6 +893,36 @@ def test_gram_expression_never_below_spread_exchange(spark, registry):
             f"{name}: gram expression evaluated below the spread exchange in "
             f"{offenders} (single-task trap — route through _explode_grams)"
         )
+
+
+def _lambda_heads(plan: str) -> set[str]:
+    """Distinct lambda bodies in a plan, by their first 40 characters with
+    expression ids dropped."""
+    return {
+        re.sub(r"#\d+L?", "", head)
+        for head in re.findall(r"lambdafunction\((.{0,40})", plan)
+    }
+
+
+def test_bloom_probe_has_no_fallback_lambda(spark, registry):
+    """Spark 4.1's ArrayTransform and ArrayAggregate are CodegenFallback:
+    a lambda in the bloom build or probe sends every gram through the
+    interpreter inside a whole-stage-codegen'd stage. The k probes are
+    unrolled, so the only lambda left in either execution (the eager
+    build and the probe) is the _five_grams transform that
+    llm_contamination shares."""
+    plans = _executed_plans(
+        spark,
+        lambda: registry["llm_contamination_bloom"]
+        .fn(spark, SF_T2)
+        .write.format("noop")
+        .mode("overwrite")
+        .save(),
+    )
+    assert not re.search(r"\baggregate\(", plans)
+    heads = _lambda_heads(plans)
+    assert len(heads) == 1 and next(iter(heads)).startswith("concat_ws("), heads
+    assert heads == _lambda_heads(_plan(registry["llm_contamination"].fn(spark, SF_T2)))
 
 
 def test_two_pass_rank_plan_has_no_nlj(spark):

@@ -1,27 +1,35 @@
-"""Session-layer tests: the generated-class cache holds a pass's working set.
+"""Session-layer tests: the fixed costs ``get_spark`` and ``tune`` set.
 
 Spark's codegen cache is one LRU per JVM. Sized below the distinct classes a
 repeated pass generates, it misses on every access and recompiles every class
 on every pass; ``get_spark`` sizes it so a warm pass compiles nothing.
+
+PySpark's DataFrame call-site capture sends extra py4j commands on every
+Column and functions call; ``get_spark`` turns it off, and a per-id budget
+of py4j commands holds plan building to what is left.
+
+``tune`` re-pins the runtime confs on every table load and live streaming
+build, but keeps a shuffle width the caller chose.
 """
 
 from __future__ import annotations
 
+import gc
 import importlib.util
 import os
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, SF_T2
 
 _WORKLOADS = os.path.join(
     os.path.dirname(os.path.dirname(__file__)), "perfbench", "workloads.py"
 )
 
 
-def _tpch_olap_ids() -> tuple[str, ...]:
+def _workload_ids(workload: str) -> tuple[str, ...]:
     spec = importlib.util.spec_from_file_location("perfbench_workloads", _WORKLOADS)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    return mod.WORKLOADS["tpch_olap"]
+    return mod.WORKLOADS[workload]
 
 
 def test_warm_pass_compiles_no_generated_class(spark, registry):
@@ -35,7 +43,7 @@ def test_warm_pass_compiles_no_generated_class(spark, registry):
     compiles = (
         spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     )
-    ids = _tpch_olap_ids()
+    ids = _workload_ids("tpch_olap")
 
     def one_pass() -> int:
         before = compiles.getCount()
@@ -47,3 +55,77 @@ def test_warm_pass_compiles_no_generated_class(spark, registry):
 
     one_pass()
     assert one_pass() == 0
+
+
+# py4j commands one warm build of each perfbench llm_pipeline id sends at
+# sf0.01, memory-delete commands excluded. Measured with call-site capture
+# off: tfidf 204, minhash 689, knn 130, pca 174, phash 558, components 968,
+# bloom 422 (3,145 in all); with it on the same builds sent 9,098. Each
+# budget is the measured count plus under 2%, so the pass stays under 3,200.
+BUILD_ROUND_TRIPS = {
+    "llm_text_tfidf": 207,
+    "llm_dedup_minhash": 698,
+    "llm_sim_knn": 132,
+    "llm_embed_pca": 177,
+    "mm_phash_neardup": 566,
+    "llm_dedup_components": 982,
+    "llm_contamination_bloom": 428,
+}
+
+
+def test_plan_builds_stay_inside_round_trip_budget(spark, registry):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    ids = _workload_ids("llm_pipeline")
+    assert set(ids) == set(BUILD_ROUND_TRIPS)
+    assert sum(BUILD_ROUND_TRIPS.values()) <= 3200
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = 0
+
+    def counting(command, *args, **kwargs):
+        nonlocal sent
+        # Memory deletes follow Python object lifetimes, not plan building.
+        if not command.startswith("m\nd\n"):
+            sent += 1
+        return send(command, *args, **kwargs)
+
+    counts = {}
+    client.send_command = counting
+    try:
+        for qid in ids:
+            registry[qid].fn(spark, SF_T2)  # warm: table loads, memos
+            gc.disable()
+            try:
+                before = sent
+                registry[qid].fn(spark, SF_T2)
+                counts[qid] = sent - before
+            finally:
+                gc.enable()
+    finally:
+        del client.send_command
+    over = {
+        q: (n, BUILD_ROUND_TRIPS[q])
+        for q, n in counts.items()
+        if n > BUILD_ROUND_TRIPS[q]
+    }
+    assert not over, f"(sent, budget) over budget: {over}; all counts: {counts}"
+
+
+def test_tune_keeps_a_caller_shuffle_width(spark, registry):
+    """A width the caller set survives a live streaming build and a
+    first-time table load; a session at Spark's default 200 is pinned."""
+    from big_data_management_and_analytics_spark.sources.io import load
+
+    key = "spark.sql.shuffle.partitions"
+    caller = spark.newSession()  # fresh load cache: load() runs tune()
+    caller.conf.set(key, "3")
+    registry["stream_tumbling_live"].fn(caller, SF_SMALL)
+    load(caller, SF_T2, "region")
+    assert caller.conf.get(key) == "3"
+
+    vanilla = spark.newSession()
+    vanilla.conf.set(key, "200")
+    load(vanilla, SF_T2, "region")
+    pinned = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
+    assert vanilla.conf.get(key) == pinned

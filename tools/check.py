@@ -213,8 +213,11 @@ def main() -> int:
         "CORRECTNESS_r{N}.json is produced from. As on the real driver, "
         "the first table load runs sources.session.tune(), which sets the "
         "runtime confs: UTC, NTZ inference off, and 32 shuffle partitions "
-        "(or $SPARK_GRAFT_SHUFFLE_PARTITIONS); static confs such as the "
-        "codegen cache size stay at Spark's defaults. Previous rounds ran this "
+        "(or $SPARK_GRAFT_SHUFFLE_PARTITIONS) over Spark's default 200; "
+        "static confs such as the codegen cache size stay at Spark's "
+        "defaults, and PySpark's DataFrame call-site capture stays on, so "
+        "timings taken here include its extra py4j round trips on every "
+        "Column call. Previous rounds ran this "
         "ad-hoc on the 50-id queue prefix; as a flag it can certify the "
         "full registry ahead of driver rotation.",
     )
