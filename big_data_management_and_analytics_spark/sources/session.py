@@ -169,11 +169,9 @@ def tune(spark: SparkSession) -> SparkSession:
 def get_spark(app_name: str = "bdma-spark") -> SparkSession:
     """Local session for tests/bench. local[N] with AQE on."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

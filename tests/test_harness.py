@@ -1,4 +1,4 @@
-"""Harness fidelity tests for tools/check.py (round 8).
+"""Harness fidelity tests for tools/check.py (round 8) and tools/profile_ids.py.
 
 Round 7's one driver failure (``events_feature_vector``) was not a wrong
 answer — it was the LOCAL harness serializing an array-typed output cell
@@ -19,17 +19,40 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-_TOOL = os.path.join(
-    os.path.dirname(os.path.dirname(__file__)), "tools", "check.py"
+from conftest import SF_SMALL
+
+_TOOLS = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+
+# Count-type layer counters: for a fixed plan and fixed data they are
+# deterministic (the benchmark's per-layer "count" metrics).
+_COUNTS = (
+    "operators.jobs",
+    "operators.exchanges",
+    "operators.bhj",
+    "operators.smj",
+    "operators.bnlj",
+    "operators.shuffle_records",
+    "operators.rows_out",
+    "sources.files_read",
+    "sources.scan_rows",
+    "sources.files_written",
+    "sources.rows_written",
+    "functions.py_rows",
 )
+
+
+def _load_tool(name):
+    spec = importlib.util.spec_from_file_location(
+        f"{name}_tool", os.path.join(_TOOLS, f"{name}.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 @pytest.fixture(scope="module")
 def check_mod():
-    spec = importlib.util.spec_from_file_location("check_tool", _TOOL)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+    return _load_tool("check")
 
 
 def test_complex_cols_detects_every_unhashable_kind(check_mod):
@@ -117,3 +140,51 @@ def test_duck_con_path_with_quote(check_mod, tmp_path):
         pq.write_table(pa.table({"x": [7]}), sf / f"{t}.parquet")
     con = check_mod.duck_con(str(sf))
     assert con.execute("SELECT x FROM orders").df()["x"].tolist() == [7]
+
+
+def test_sweep_rows_tier_needs_a_row(check_mod, spark, capsys):
+    """A rows-tier id (no oracle) passes only with at least one row: the
+    driver records ``no_oracle`` with ``spark_rows == 0`` as red
+    (``plans/driver_history.py::_green``), so the local sweep must too."""
+    fns = {"empty": lambda s, sf: s.range(0), "one": lambda s, sf: s.range(1)}
+    assert check_mod.sweep(spark, fns, {}, ["empty"], SF_SMALL) == (0, 1, 0)
+    assert check_mod.sweep(spark, fns, {}, ["one"], SF_SMALL) == (0, 0, 1)
+    out = capsys.readouterr().out
+    assert "FAIL  empty: 0 rows" in out
+    assert "ROWS  one: 1 rows" in out
+
+
+def test_profile_counters_plans_and_errors(spark, registry, tmp_path):
+    """Two profiles of the same ids in one session give identical work
+    counters; an id's counters are the sum of its executions' folds, each
+    carrying its final physical plan; an id that raises is recorded with
+    its error and the ids after it are still profiled."""
+    import json
+
+    profile_ids = _load_tool("profile_ids")
+
+    def broken(spark, sf):
+        raise ValueError("no such table")
+
+    ids = ("join_star_5way", "src_csv_roundtrip")
+    fns = {ids[0]: registry[ids[0]].fn, "broken": broken, ids[1]: registry[ids[1]].fn}
+    runs = [
+        profile_ids.profile(spark, fns, SF_SMALL, str(tmp_path / str(k)))
+        for k in range(2)
+    ]
+    for qid in ids:
+        first, second = (run[qid] for run in runs)
+        assert first["error"] is None
+        assert first["executions"]
+        assert {k: first["counters"][k] for k in _COUNTS} == {
+            k: second["counters"][k] for k in _COUNTS
+        }
+        for key, total in first["counters"].items():
+            parts = sum(ex["counters"].get(key, 0) for ex in first["executions"])
+            assert parts == pytest.approx(total), key
+        for ex in first["executions"]:
+            assert ex["plan"].startswith("== Physical Plan ==")
+    assert runs[0]["join_star_5way"]["counters"]["operators.bhj"] > 0
+    assert runs[0]["src_csv_roundtrip"]["counters"]["sources.files_written"] > 0
+    with open(tmp_path / "0" / "broken.json") as fh:
+        assert json.load(fh)["error"] == "ValueError: no such table"

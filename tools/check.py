@@ -183,6 +183,50 @@ def compare(name: str, spark_pd: pd.DataFrame, duck_pd: pd.DataFrame) -> list[st
     return issues
 
 
+def sweep(spark, fns: dict, oracles: dict, names, sf: str) -> tuple[int, int, int]:
+    """Run each of ``names`` through ``fns`` (id -> ``fn(spark, sf)``) and
+    compare it with its DuckDB oracle (``oracles`` id -> SQL, None or absent
+    for the rows tier). A rows-tier id passes only with at least one row,
+    as on the driver. Returns (passed, failed, rows-only)."""
+    con = duck_con(sf)
+    passed = failed = rows_only = 0
+    for name in names:
+        t0 = time.time()
+        try:
+            sdf = fns[name](spark, sf).toPandas()
+        except Exception:
+            print(f"FAIL  {name}: spark raised")
+            traceback.print_exc(limit=4)
+            failed += 1
+            continue
+        oracle = oracles.get(name)
+        if oracle is None:
+            tag = "ROWS" if len(sdf) else "FAIL"
+            print(f"{tag}  {name}: {len(sdf)} rows  ({time.time()-t0:.1f}s)")
+            if len(sdf):
+                rows_only += 1
+            else:
+                failed += 1
+            continue
+        try:
+            ddf = con.execute(oracle).df()
+        except Exception:
+            print(f"FAIL  {name}: duckdb raised")
+            traceback.print_exc(limit=4)
+            failed += 1
+            continue
+        issues = compare(name, sdf, ddf)
+        if issues:
+            print(f"FAIL  {name}  ({time.time()-t0:.1f}s)")
+            for i in issues[:10]:
+                print(f"      {i}")
+            failed += 1
+        else:
+            print(f"PASS  {name}: {len(sdf)} rows  ({time.time()-t0:.1f}s)")
+            passed += 1
+    return passed, failed, rows_only
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -268,90 +312,26 @@ def main() -> int:
             .getOrCreate()
         )
         spark.sparkContext.setLogLevel("ERROR")
-        con = duck_con(args.sf)
-        passed = failed = rows_only = 0
-        for name in names:
-            t0 = time.time()
-            try:
-                sdf = fns[name](spark, args.sf).toPandas()
-            except Exception:
-                print(f"FAIL  {name}: spark raised")
-                traceback.print_exc(limit=4)
-                failed += 1
-                continue
-            if name not in oracles:
-                print(f"ROWS  {name}: {len(sdf)} rows  ({time.time()-t0:.1f}s)")
-                rows_only += 1
-                continue
-            try:
-                ddf = con.execute(oracles[name]).df()
-            except Exception:
-                print(f"FAIL  {name}: duckdb raised")
-                traceback.print_exc(limit=4)
-                failed += 1
-                continue
-            issues = compare(name, sdf, ddf)
-            if issues:
-                print(f"FAIL  {name}  ({time.time()-t0:.1f}s)")
-                for i in issues[:10]:
-                    print(f"      {i}")
-                failed += 1
-            else:
-                print(f"PASS  {name}: {len(sdf)} rows  ({time.time()-t0:.1f}s)")
-                passed += 1
-        print(
-            f"\ndriver-surface: {passed} passed, {failed} failed, "
-            f"{rows_only} rows-only"
-        )
-        return 1 if failed else 0
+        label = "driver-surface: "
+    else:
+        if args.list:
+            for n, q in sorted(qs.items()):
+                print(f"{q.category}  {'oracle' if q.oracle else 'rows  '}  {n}")
+            print(f"{len(qs)} queries, {sum(1 for q in qs.values() if q.oracle)} oracle-tier")
+            return 0
 
-    if args.list:
-        for n, q in sorted(qs.items()):
-            print(f"{q.category}  {'oracle' if q.oracle else 'rows  '}  {n}")
-        print(f"{len(qs)} queries, {sum(1 for q in qs.values() if q.oracle)} oracle-tier")
-        return 0
+        names = args.names or sorted(qs)
+        if args.category:
+            names = [n for n in names if qs[n].category == args.category]
+        fns = {n: q.fn for n, q in qs.items()}
+        oracles = {n: q.oracle for n, q in qs.items()}
 
-    names = args.names or sorted(qs)
-    if args.category:
-        names = [n for n in names if qs[n].category == args.category]
+        from big_data_management_and_analytics_spark.sources.session import get_spark
 
-    from big_data_management_and_analytics_spark.sources.session import get_spark
-
-    spark = get_spark("check")
-    con = duck_con(args.sf)
-    passed = failed = rows_only = 0
-    for name in names:
-        q = qs[name]
-        t0 = time.time()
-        try:
-            sdf = q.fn(spark, args.sf).toPandas()
-        except Exception:
-            print(f"FAIL  {name}: spark raised")
-            traceback.print_exc(limit=4)
-            failed += 1
-            continue
-        if q.oracle is None:
-            tag = "ROWS" if len(sdf) >= 0 else "FAIL"
-            print(f"{tag}  {name}: {len(sdf)} rows  ({time.time()-t0:.1f}s)")
-            rows_only += 1
-            continue
-        try:
-            ddf = con.execute(q.oracle).df()
-        except Exception:
-            print(f"FAIL  {name}: duckdb raised")
-            traceback.print_exc(limit=4)
-            failed += 1
-            continue
-        issues = compare(name, sdf, ddf)
-        if issues:
-            print(f"FAIL  {name}  ({time.time()-t0:.1f}s)")
-            for i in issues[:10]:
-                print(f"      {i}")
-            failed += 1
-        else:
-            print(f"PASS  {name}: {len(sdf)} rows  ({time.time()-t0:.1f}s)")
-            passed += 1
-    print(f"\n{passed} passed, {failed} failed, {rows_only} rows-only")
+        spark = get_spark("check")
+        label = ""
+    passed, failed, rows_only = sweep(spark, fns, oracles, names, args.sf)
+    print(f"\n{label}{passed} passed, {failed} failed, {rows_only} rows-only")
     return 1 if failed else 0
 
 
