@@ -18,7 +18,6 @@ cells before scoring, turning O(Q·N) into O(Q·N/cells·probes).
 
 from __future__ import annotations
 
-import atexit
 import math
 
 import numpy as np
@@ -29,7 +28,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import pandas_udf
 
 from big_data_management_and_analytics_spark.plans.registry import register
-from big_data_management_and_analytics_spark.sources.io import load, local_frame
+from big_data_management_and_analytics_spark.sources.io import (
+    load,
+    local_frame,
+    scratch_dir,
+)
 
 
 def dot(a, b):
@@ -812,23 +815,6 @@ def llm_embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Index directories from the last llm_index_persist call; dropped on the
-# next call (the returned DataFrame lazily reads this run's files, so they
-# must outlive the return — same discipline as sink_bucketed_join). The
-# FINAL call's directory is reclaimed at interpreter exit (round-2 advice:
-# it previously leaked one directory per process).
-_PREV_INDEX_DIRS: list[str] = []
-
-
-@atexit.register
-def _cleanup_index_dirs() -> None:
-    import shutil
-
-    for d in _PREV_INDEX_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _PREV_INDEX_DIRS.clear()
-
-
 @register(
     "llm_index_persist",
     "K",
@@ -848,15 +834,7 @@ def _cleanup_index_dirs() -> None:
     ),
 )
 def llm_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    for d in _PREV_INDEX_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _PREV_INDEX_DIRS.clear()
-    base = tempfile.mkdtemp(prefix="bdma_ivf_idx_")
-    _PREV_INDEX_DIRS.append(base)
-
+    base = scratch_dir("bdma_ivf_idx_")
     v = _vecs(spark, sf_dir).select("vec_id", "emb")
     cent = _kmeans_centroids(v, k=8, iters=3)
 

@@ -3,6 +3,7 @@
 Every query goes through ``load`` so the events ns→µs recipe and schema
 validation are applied uniformly. ``register_views`` exposes all tables as
 temp views for the SQL entry point (SURVEY.md §3 entry point 2).
+``scratch_dir`` is where every file a query writes lives.
 
 Scale note: loads are plain ``spark.read.parquet`` — column pruning and
 predicate pushdown reach the scan because nothing here materializes or caches;
@@ -11,7 +12,10 @@ the DataFrame returned is still a lazy scan node.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -129,6 +133,37 @@ SCHEMAS: dict[str, T.StructType] = {
 }
 
 
+# The one per-process root of every scratch_dir; made by the first call.
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh, empty directory for files a query writes.
+
+    A query returns a lazy DataFrame that reads the files it wrote only
+    when collected, which may be after later calls. So every directory
+    lives under one root per process, made in the temp dir (``TMPDIR``) on
+    first use, and only an exit hook removes that root: no call deletes
+    what an earlier call's frame still reads."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="bdma-spark-")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
+
+
+def with_event_ts(df: DataFrame) -> DataFrame:
+    """Normalize events ``ts`` to TimestampType whatever its parquet type.
+
+    A TIMESTAMP(NANOS) column (which Spark 4 rejects) reads as int64
+    nanoseconds under nanosAsLong and is truncated here to µs by integer
+    division, bit-identical to DuckDB's ns→µs truncation (SURVEY.md §0 P1).
+    A TIMESTAMP(MICROS) column is already a timestamp and passes through."""
+    if dict(df.dtypes).get("ts") == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
+
+
 # DataFrames are immutable logical plans, so the (session, dir, table) →
 # DataFrame mapping is safe to memoize; saves re-listing + footer reads on
 # every query invocation (bench runs each query 4×).
@@ -136,14 +171,8 @@ _LOAD_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Load one fixture table with the pinned schema.
-
-    events: if the parquet stores ts as TIMESTAMP(NANOS) (which Spark 4
-    rejects), nanosAsLong reads it as int64 nanoseconds and it is converted
-    here via integer division to µs (matches DuckDB's ns→µs truncation
-    exactly — SURVEY.md §0 P1). TIMESTAMP(MICROS) fixtures read as
-    timestamp directly and skip the conversion.
-    """
+    """Load one fixture table with the pinned schema (events ``ts`` through
+    ``with_event_ts``)."""
     key = (id(spark), os.path.abspath(sf_dir), table)
     cached = _LOAD_CACHE.get(key)
     if cached is not None:
@@ -162,8 +191,8 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     tune(spark)
     path = os.path.join(sf_dir, f"{table}.parquet")
     df = spark.read.parquet(path)
-    if table == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if table == "events":
+        df = with_event_ts(df)
     expected = SCHEMAS[table]
     got = {f.name: f.dataType for f in df.schema.fields}
     for f in expected.fields:

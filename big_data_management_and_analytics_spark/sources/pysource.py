@@ -207,16 +207,16 @@ else:  # pragma: no cover
 def src_stream_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not (_HAS_DATASOURCE_API and _HAS_STREAM_READER):  # pragma: no cover
         raise NotImplementedError("requires Spark >= 4.0 streaming DataSource API")
-    import shutil
-    import tempfile
     import uuid
+
+    from big_data_management_and_analytics_spark.sources.io import scratch_dir
 
     try:
         spark.dataSource.register(SyntheticEventsDataSource)
     except Exception:
         pass
     name = f"pyds_stream_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdma_pyds_ckpt_")
+    ckpt = scratch_dir("bdma_pyds_ckpt_")
     stream = (
         spark.readStream.format("synthetic_events")
         .option("rows", 2000)
@@ -236,7 +236,6 @@ def src_stream_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -319,18 +318,6 @@ else:  # pragma: no cover
     _HAS_DATASOURCE_WRITER = False
 
 
-_SINK_DIRS: list[str] = []
-
-
-@__import__("atexit").register
-def _cleanup_sink_dirs() -> None:
-    import shutil
-
-    for d in _SINK_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _SINK_DIRS.clear()
-
-
 @register(
     "sink_custom_datasource",
     "A",
@@ -358,19 +345,14 @@ def _cleanup_sink_dirs() -> None:
 def sink_custom_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not _HAS_DATASOURCE_WRITER:  # pragma: no cover
         raise NotImplementedError("requires Spark >= 4.0 DataSource writer API")
-    import shutil
-    import tempfile
-
     from big_data_management_and_analytics_spark.plans.determinism import cents
-    from big_data_management_and_analytics_spark.sources.io import load
+    from big_data_management_and_analytics_spark.sources.io import load, scratch_dir
 
     try:
         spark.dataSource.register(JsonlSinkDataSource)
     except Exception:
         pass  # already registered in this session
-    path = tempfile.mkdtemp(prefix="spark-graft-jsonl-sink-")
-    shutil.rmtree(path, ignore_errors=True)
-    _SINK_DIRS.append(path)
+    path = scratch_dir("bdma_jsonl_sink_")
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", cents("value").alias("vc")
     )

@@ -8,10 +8,7 @@ tests/test_plans.py.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -23,6 +20,7 @@ from big_data_management_and_analytics_spark.sources.io import (
     load,
     local_frame,
     register_views,
+    scratch_dir,
 )
 
 
@@ -102,29 +100,6 @@ def sink_view_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROUNDTRIP_DIRS: list[str] = []
-
-
-@atexit.register
-def _cleanup_roundtrip_dirs() -> None:
-    for d in _ROUNDTRIP_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _ROUNDTRIP_DIRS.clear()
-
-
-def _roundtrip_dir(prefix: str) -> str:
-    base = tempfile.mkdtemp(prefix=prefix)
-    shutil.rmtree(base, ignore_errors=True)
-    # DROP TABLE on external tables leaves files behind; reclaim at exit.
-    _ROUNDTRIP_DIRS.append(base)
-    return base
-
-
-# Catalog names from the last sink_bucketed_join call, dropped on the next
-# call so repeated runs don't accumulate tables.
-_PREV_BUCKET_TABLES: list[str] = []
-
-
 @register(
     "src_csv_roundtrip",
     "A",
@@ -137,7 +112,7 @@ _PREV_BUCKET_TABLES: list[str] = []
     ),
 )
 def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _roundtrip_dir("bdma_csv_")
+    out = scratch_dir("bdma_csv_")
     nation = load(spark, sf_dir, "nation")
     nation.write.mode("overwrite").option("header", "true").csv(out)
     return spark.read.schema(SCHEMAS["nation"]).option("header", "true").csv(out)
@@ -155,7 +130,7 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _roundtrip_dir("bdma_json_")
+    out = scratch_dir("bdma_json_")
     customer = load(spark, sf_dir, "customer")
     customer.write.mode("overwrite").json(out)
     return spark.read.schema(SCHEMAS["customer"]).json(out)
@@ -172,7 +147,7 @@ def src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _roundtrip_dir("bdma_orc_")
+    out = scratch_dir("bdma_orc_")
     part = load(spark, sf_dir, "part")
     part.write.mode("overwrite").orc(out)
     return spark.read.schema(SCHEMAS["part"]).orc(out)
@@ -201,19 +176,10 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
-    # Drop the previous invocation's tables (this run's must stay live —
-    # the returned DataFrame is lazy and still references them).
-    for tbl in _PREV_BUCKET_TABLES:
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        except Exception:
-            pass
-    _PREV_BUCKET_TABLES.clear()
-
+    # Fresh names per call: an earlier call's frame still reads its tables.
     tag = uuid.uuid4().hex[:8]
     o_tbl, c_tbl = f"orders_b_{tag}", f"customer_b_{tag}"
-    _PREV_BUCKET_TABLES.extend([o_tbl, c_tbl])
-    base = _roundtrip_dir("bdma_bucket_")
+    base = scratch_dir("bdma_bucket_")
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     (
@@ -255,7 +221,7 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _roundtrip_dir("bdma_part_")
+    out = scratch_dir("bdma_part_")
     events = load(spark, sf_dir, "events")
     events.write.mode("overwrite").partitionBy("event_type").parquet(out)
     back = spark.read.parquet(out).filter(F.col("event_type") == "purchase")
@@ -291,8 +257,8 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    frag_dir = _roundtrip_dir("bdma_frag_")
-    compact_dir = _roundtrip_dir("bdma_compact_")
+    frag_dir = scratch_dir("bdma_frag_")
+    compact_dir = scratch_dir("bdma_compact_")
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
     )
@@ -339,7 +305,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def src_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _roundtrip_dir("bdma_text_")
+    out = scratch_dir("bdma_text_")
     docs = load(spark, sf_dir, "documents")
     docs.select(
         F.regexp_replace("text", r"[\r\n]+", " ").alias("value")
@@ -771,7 +737,7 @@ def meta_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _roundtrip_dir("bdma_xml_")
+    out = scratch_dir("bdma_xml_")
     region = load(spark, sf_dir, "region")
     region.write.mode("overwrite").format("xml").option("rootTag", "regions").option(
         "rowTag", "region"
@@ -845,20 +811,6 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Snapshot dirs from the last sink_table_versions call (next call drops
-# them; the returned DataFrame lazily reads this run's snapshots). The
-# final call's snapshots are reclaimed at interpreter exit (round-2
-# advice: they previously leaked one directory per process).
-_PREV_VERSION_DIRS: list[str] = []
-
-
-@atexit.register
-def _cleanup_version_dirs() -> None:
-    for d in _PREV_VERSION_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _PREV_VERSION_DIRS.clear()
-
-
 @register(
     "sink_table_versions",
     "A",
@@ -895,15 +847,9 @@ def _cleanup_version_dirs() -> None:
     ),
 )
 def sink_table_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from big_data_management_and_analytics_spark.plans.determinism import cents
 
-    for d in _PREV_VERSION_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _PREV_VERSION_DIRS.clear()
-    base = _roundtrip_dir("bdma_versions_")
-    _PREV_VERSION_DIRS.append(base)
+    base = scratch_dir("bdma_versions_")
 
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
     c.write.mode("overwrite").parquet(f"{base}/v=1")
@@ -958,7 +904,7 @@ def sink_table_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _roundtrip_dir("bdma_evo_")
+    out = scratch_dir("bdma_evo_")
     o = load(spark, sf_dir, "orders")
     old_batch = o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
@@ -1009,7 +955,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_management_and_analytics_spark.sources.session import tune
 
-    out = _roundtrip_dir("bdma_dpp_")
+    out = scratch_dir("bdma_dpp_")
     ev = load(spark, sf_dir, "events")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out + "/fact")
     # Materialized dim with an INDEPENDENT attribute (tier): the DPP rule
@@ -1055,10 +1001,9 @@ def join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Fixed (import-time) directory so the static oracle string can read the
-# same files Spark writes; rewritten per call, reclaimed at exit.
-_BINARYFILE_DIR = os.path.join(tempfile.gettempdir(), "spark-graft-binaryfile")
-_ROUNDTRIP_DIRS.append(_BINARYFILE_DIR)
+# Taken at import, because the static oracle text reads the same files
+# Spark writes; each call rewrites them.
+_BINARYFILE_DIR = scratch_dir("bdma_binaryfile_")
 
 
 @register(
@@ -1097,7 +1042,6 @@ def src_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "\n",
     )
     per_lang = d.groupBy("lang").agg(content.alias("value"))
-    shutil.rmtree(_BINARYFILE_DIR, ignore_errors=True)
     per_lang.select("value", "lang").write.partitionBy("lang").mode(
         "overwrite"
     ).text(_BINARYFILE_DIR)
@@ -1111,10 +1055,6 @@ def src_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("length").cast("bigint").alias("n_bytes"),
         F.md5("content").alias("content_md5"),
     )
-
-
-_CSV_CORRUPT_DIR = os.path.join(tempfile.gettempdir(), "spark-graft-csv-corrupt")
-_ROUNDTRIP_DIRS.append(_CSV_CORRUPT_DIR)
 
 
 @register(
@@ -1151,13 +1091,13 @@ def src_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 2 == 0,
         F.concat_ws(",", F.col("doc_id"), F.col("n_chars")),
     ).otherwise(F.concat(F.col("doc_id"), F.lit(";broken")))
-    shutil.rmtree(_CSV_CORRUPT_DIR, ignore_errors=True)
-    d.select(line.alias("value")).write.mode("overwrite").text(_CSV_CORRUPT_DIR)
+    out = scratch_dir("bdma_csv_corrupt_")
+    d.select(line.alias("value")).write.mode("overwrite").text(out)
     parsed = (
         spark.read.schema("id BIGINT, n BIGINT, _corrupt_record STRING")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(_CSV_CORRUPT_DIR)
+        .csv(out)
     )
     good = F.col("_corrupt_record").isNull()
     return parsed.agg(
@@ -1170,12 +1110,6 @@ def src_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("sum_n_good"),
     )
-
-
-_CORRUPT_SKIP_DIR = os.path.join(
-    tempfile.gettempdir(), "spark-graft-corrupt-skip"
-)
-_ROUNDTRIP_DIRS.append(_CORRUPT_SKIP_DIR)
 
 
 @register(
@@ -1201,13 +1135,13 @@ _ROUNDTRIP_DIRS.append(_CORRUPT_SKIP_DIR)
 )
 def scan_corrupt_files_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select("doc_id")
-    shutil.rmtree(_CORRUPT_SKIP_DIR, ignore_errors=True)
-    d.write.mode("overwrite").parquet(_CORRUPT_SKIP_DIR)
-    with open(os.path.join(_CORRUPT_SKIP_DIR, "part-corrupt.parquet"), "wb") as f:
+    out = scratch_dir("bdma_corrupt_skip_")
+    d.write.mode("overwrite").parquet(out)
+    with open(os.path.join(out, "part-corrupt.parquet"), "wb") as f:
         f.write(b"PAR1\x00\x13\x37not a real parquet footer")
     back = (
         spark.read.option("ignoreCorruptFiles", "true")
-        .parquet(_CORRUPT_SKIP_DIR)
+        .parquet(out)
     )
     return back.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),

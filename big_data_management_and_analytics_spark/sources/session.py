@@ -96,18 +96,6 @@ CALL_SITE_CAPTURE = "false"
 
 # SparkContexts that already received the package zip (by applicationId).
 _PYFILES_SHIPPED: set[str] = set()
-_PYFILES_DIRS: list[str] = []
-
-
-@__import__("atexit").register
-def _cleanup_pyfiles_dirs() -> None:
-    """Remove the temp zip staging dirs at interpreter exit (Spark has
-    its own copy after addPyFile; same discipline as the persisted-index
-    and snapshot temp dirs — round-2 advice)."""
-    import shutil
-
-    for d in _PYFILES_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -130,11 +118,12 @@ def _ship_package(spark: SparkSession) -> None:
     if app in _PYFILES_SHIPPED:
         return
     import shutil
-    import tempfile
+
+    # io.py imports this module, so the helper is imported here.
+    from big_data_management_and_analytics_spark.sources.io import scratch_dir
 
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tmp = tempfile.mkdtemp(prefix="bdma_pyfiles_")
-    _PYFILES_DIRS.append(tmp)
+    tmp = scratch_dir("bdma_pyfiles_")
     try:
         zip_path = shutil.make_archive(
             os.path.join(tmp, "big_data_management_and_analytics_spark_pkg"),

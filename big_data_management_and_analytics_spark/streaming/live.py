@@ -8,15 +8,14 @@ batch_twins.py so stream and batch semantics cannot drift.
 Timestamp units: readStream needs an explicit schema, so it is derived
 from a batch read of the same file — that honors whatever physical type
 the parquet carries (TIMESTAMP(MICROS) reads as timestamp; legacy
-TIMESTAMP(NANOS) reads as int64 under nanosAsLong and is converted via
-``timestamp_micros(ts div 1000)``, same recipe as sources/io.py).
+TIMESTAMP(NANOS) reads as int64 under nanosAsLong and is converted by
+``sources/io.py::with_event_ts``, the recipe ``load`` uses).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
 
 import pandas as pd
@@ -25,7 +24,11 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from big_data_management_and_analytics_spark.plans.registry import register
-from big_data_management_and_analytics_spark.sources.io import local_frame
+from big_data_management_and_analytics_spark.sources.io import (
+    local_frame,
+    scratch_dir,
+    with_event_ts,
+)
 from big_data_management_and_analytics_spark.sources.session import tune
 from big_data_management_and_analytics_spark.streaming.batch_twins import (
     DEDUP_ORACLE,
@@ -39,16 +42,6 @@ def _batch_schema(spark: SparkSession, sample_file: str) -> T.StructType:
     """Schema a batch read resolves for the file — the unit-correct source
     of truth for the explicit schema readStream requires."""
     return spark.read.parquet(sample_file).schema
-
-
-def _with_event_ts(df: DataFrame) -> DataFrame:
-    """Normalize ``ts`` to TimestampType regardless of parquet physical type:
-    bigint means TIMESTAMP(NANOS) read under nanosAsLong → truncate ns→µs
-    (bit-identical to DuckDB's ns→µs truncation); otherwise it is already a
-    timestamp."""
-    if dict(df.dtypes).get("ts") == "bigint":
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -70,7 +63,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-    return _with_event_ts(raw)
+    return with_event_ts(raw)
 
 
 def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
@@ -89,7 +82,7 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     production sets SPARK_GRAFT_STREAM_STATE_PARTS to O(cluster cores)."""
     spark = stream_df.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdma_ckpt_")
+    ckpt = scratch_dir("bdma_ckpt_")
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions",
@@ -115,7 +108,6 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
             raise TimeoutError(f"streaming query {name} did not finish in 300s")
     finally:
         q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
     return stream_df.sparkSession.table(name)
 
 
@@ -151,47 +143,38 @@ def stream_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    src = tempfile.mkdtemp(prefix="bdma_late_src_")
-    try:
-        full = (
-            spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-            .limit(2000)
-            .toPandas()
-        )
-        cutoff = full["ts"].quantile(0.5)
-        recent = full[full["ts"] >= cutoff]
-        late = full[full["ts"] < cutoff]
-        # File order = modification time; write recent first so the
-        # watermark has advanced past the late file's event times.
-        recent_path = os.path.join(src, "batch0.parquet")
-        late_path = os.path.join(src, "batch1.parquet")
-        recent.to_parquet(recent_path, index=False)
-        late.to_parquet(late_path, index=False)
-        now = os.stat(recent_path).st_mtime
-        os.utime(recent_path, (now - 60, now - 60))
-        os.utime(late_path, (now, now))
+    src = scratch_dir("bdma_late_src_")
+    full = (
+        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        .limit(2000)
+        .toPandas()
+    )
+    cutoff = full["ts"].quantile(0.5)
+    recent = full[full["ts"] >= cutoff]
+    late = full[full["ts"] < cutoff]
+    # File order = modification time; write recent first so the
+    # watermark has advanced past the late file's event times.
+    recent_path = os.path.join(src, "batch0.parquet")
+    late_path = os.path.join(src, "batch1.parquet")
+    recent.to_parquet(recent_path, index=False)
+    late.to_parquet(late_path, index=False)
+    now = os.stat(recent_path).st_mtime
+    os.utime(recent_path, (now - 60, now - 60))
+    os.utime(late_path, (now, now))
 
-        raw = (
-            spark.readStream.schema(_batch_schema(spark, recent_path))
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        ev = _with_event_ts(raw).withWatermark("ts", "10 minutes")
-        counts = ev.groupBy(F.window("ts", "1 hour").alias("win")).agg(
-            F.count(F.lit(1)).alias("n_events")
-        )
-        out = _run_to_memory(
-            counts.select(F.col("win.start").alias("window_start"), "n_events"),
-            "append",
-        )
-        # Materialize before the source directory disappears.
-        pdf = out.toPandas()
-        return spark.createDataFrame(
-            pdf if len(pdf) else pd.DataFrame({"window_start": pd.Series([], dtype="datetime64[us]"), "n_events": pd.Series([], dtype="int64")}),
-            schema="window_start timestamp, n_events long",
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    raw = (
+        spark.readStream.schema(_batch_schema(spark, recent_path))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    ev = with_event_ts(raw).withWatermark("ts", "10 minutes")
+    counts = ev.groupBy(F.window("ts", "1 hour").alias("win")).agg(
+        F.count(F.lit(1)).alias("n_events")
+    )
+    return _run_to_memory(
+        counts.select(F.col("win.start").alias("window_start"), "n_events"),
+        "append",
+    )
 
 
 # Per-user sessionization summary — the gaps-and-islands equivalent of
@@ -481,9 +464,9 @@ def stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
         results.append((mode, out.count()))
 
     # foreachBatch → parquet sink path
-    sink = tempfile.mkdtemp(prefix="bdma_fb_sink_")
-    shutil.rmtree(sink, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="bdma_fb_ckpt_")
+    # Not created until a batch is written; the count below reads 0 if none was.
+    sink = os.path.join(scratch_dir("bdma_fb_sink_"), "out")
+    ckpt = scratch_dir("bdma_fb_ckpt_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(sink)
@@ -506,8 +489,6 @@ def stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
     n_sink = spark.read.parquet(sink).count() if os.path.isdir(sink) else 0
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
     results.append(("foreach_batch_parquet", n_sink))
 
     return local_frame(spark, results, "mode string, n_rows long")
@@ -591,14 +572,10 @@ def stream_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     tune(spark)
-    src = tempfile.mkdtemp(prefix="bdma_ckres_src_")
-    sink = tempfile.mkdtemp(prefix="bdma_ckres_sink_")
-    ckpt = tempfile.mkdtemp(prefix="bdma_ckres_ckpt_")
+    src = scratch_dir("bdma_ckres_src_")
+    sink = scratch_dir("bdma_ckres_sink_")
+    ckpt = scratch_dir("bdma_ckres_ckpt_")
     events_file = os.path.join(sf_dir, "events.parquet")
 
     def run_once() -> None:
@@ -638,14 +615,8 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_once()
     stage_batch("batch_b")
     run_once()
-    # Materialize the counts BEFORE cleanup so no temp dir has to outlive
-    # the lazy return (same discipline as stream_watermark_late).
-    rows = (
+    return (
         spark.read.parquet(sink)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
-        .collect()
     )
-    for d in (src, sink, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    return local_frame(spark, rows, "event_type string, n_events long")

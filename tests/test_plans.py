@@ -105,6 +105,17 @@ def test_bucketed_join_has_no_shuffle(spark, registry):
     assert "hashpartitioning(c_custkey" not in plan
 
 
+def test_bucketed_join_repeats_its_work(spark, registry):
+    """A later call starts as many SQL executions as the first: no call
+    drops the tables an earlier call's frame still reads."""
+    fn = registry["sink_bucketed_join"].fn
+    first = _executed_plans(spark, lambda: fn(spark, SF_T2))
+    second = _executed_plans(spark, lambda: fn(spark, SF_T2))
+    head = "== Physical Plan =="
+    assert second.count(head) == first.count(head)
+    assert "DropTable" not in first + second
+
+
 def test_asof_join_is_single_window_not_loop(spark, registry):
     """The as-of join must be a window plan (one shuffle), not a nested loop."""
     df = registry["join_asof_event"].fn(spark, SF_T2)

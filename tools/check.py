@@ -231,7 +231,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--list", action="store_true")
-    ap.add_argument("--category", default=None)
     ap.add_argument(
         "--new-id-gate",
         action="store_true",
@@ -321,8 +320,6 @@ def main() -> int:
             return 0
 
         names = args.names or sorted(qs)
-        if args.category:
-            names = [n for n in names if qs[n].category == args.category]
         fns = {n: q.fn for n, q in qs.items()}
         oracles = {n: q.oracle for n, q in qs.items()}
 
