@@ -839,12 +839,10 @@ def llm_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = _kmeans_centroids(v, k=8, iters=3)
 
     # Build: assignments partitioned by cell + centroid side table.
-    (
-        v.select(_nearest_cell_udf(cent)(F.col("emb")).alias("cell"), "vec_id", "emb")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{base}/assignments")
+    assign = v.select(
+        _nearest_cell_udf(cent)(F.col("emb")).alias("cell"), "vec_id", "emb"
     )
+    assign.write.mode("overwrite").partitionBy("cell").parquet(f"{base}/assignments")
     local_frame(
         spark,
         [(i, [float(x) for x in row]) for i, row in enumerate(cent)],
@@ -852,7 +850,7 @@ def llm_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).write.mode("overwrite").parquet(f"{base}/centroids")
 
     # Serve: read the persisted index; only probed cells' partitions scan.
-    idx = spark.read.parquet(f"{base}/assignments")
+    idx = spark.read.schema(assign.schema).parquet(f"{base}/assignments")
     q = v.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("emb").alias("q_emb"),

@@ -146,6 +146,15 @@ REVERIFY_FIRST: dict[str, int] = {
         stream_checkpoint_resume ts_periodogram""".split(),
         13,
     ),
+    # r13: read-backs of just-written directories take the writer's schema
+    # instead of inferring it. Their executed plans equal the parent's;
+    # the inference job they no longer run was outside every execution,
+    # where the plan diff cannot see it. The other changed ids
+    # (sink_compaction, llm_index_persist, stream_checkpoint_resume) are
+    # listed above.
+    **dict.fromkeys(
+        "join_dpp_prune sink_parquet_partitioned sink_table_versions".split(), 13
+    ),
 }
 
 

@@ -232,6 +232,26 @@ def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
         load(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
+def slot_width(spark: SparkSession) -> int:
+    """``min(spark.sql.shuffle.partitions, defaultParallelism)``: one task
+    per slot that will run the work, with the shuffle width as the upper
+    bound.
+
+    Measured on a 4-core host over one warm noop pass of perfbench's
+    ``llm_pipeline`` ids at sf0.01: with ``spread`` sized to the shuffle
+    width (32), 16 of its 54 completed stages ran 32 tasks each, 553 tasks
+    in all with 7.2 s of executor run time and 1.5 s of deserialization;
+    at the slot count it runs 105 tasks, 4.5 s and 0.4 s, and the
+    perfbench warm pass median went 8.60 → 7.39 s (10 interleaved pairs).
+    Cluster caveat: under dynamic allocation ``defaultParallelism``
+    counts only the executors already registered (at least 2), so set
+    Spark's own ``spark.default.parallelism`` to the slot count there."""
+    return min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
+
+
 def spread(df: DataFrame, *keys: str, skip_when_split: bool = False) -> DataFrame:
     """Explicit-count keyed repartition ahead of CPU-heavy row expressions.
 
@@ -242,20 +262,10 @@ def spread(df: DataFrame, *keys: str, skip_when_split: bool = False) -> DataFram
     correct for shuffle bytes, wrong when the cost is downstream CPU per
     row.
 
-    Width: ``min(spark.sql.shuffle.partitions, defaultParallelism)``, one
-    task per slot that will run the work; the shuffle width stays the
-    upper bound. The explicit count is never coalesced by AQE, and its
-    hash partitioning on the key also satisfies every downstream
+    Width: ``slot_width``. The explicit count is never coalesced by AQE,
+    and its hash partitioning on the key also satisfies every downstream
     aggregate and join on that key, so those stages run at this width
-    too. Measured on a 4-core host over one warm noop pass of perfbench's
-    ``llm_pipeline`` ids at sf0.01: sized to the shuffle width (32), 16
-    of its 54 completed stages ran 32 tasks each, 553 tasks in all with
-    7.2 s of executor run time and 1.5 s of deserialization; at the slot
-    count it runs 105 tasks, 4.5 s and 0.4 s, and the perfbench warm
-    pass median went 8.60 → 7.39 s (10 interleaved pairs).
-    Cluster caveat: under dynamic allocation ``defaultParallelism``
-    counts only the executors already registered (at least 2), so set
-    Spark's own ``spark.default.parallelism`` to the slot count there.
+    too.
 
     ``skip_when_split``: when the input ALREADY has at least that many
     files (the production layout — at 100 TB every table is thousands of
@@ -274,11 +284,7 @@ def spread(df: DataFrame, *keys: str, skip_when_split: bool = False) -> DataFram
     skip can only change the plan, never the result. inputFiles() reads
     the already-built file index (no job); non-file inputs (streaming,
     local relations) fall through to the repartition."""
-    spark = df.sparkSession
-    n = min(
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        spark.sparkContext.defaultParallelism,
-    )
+    n = slot_width(df.sparkSession)
     if skip_when_split:
         try:
             if len(df.inputFiles()) >= n:

@@ -21,6 +21,7 @@ from big_data_management_and_analytics_spark.sources.io import (
     local_frame,
     register_views,
     scratch_dir,
+    slot_width,
 )
 
 
@@ -224,8 +225,14 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = scratch_dir("bdma_part_")
     events = load(spark, sf_dir, "events")
     events.write.mode("overwrite").partitionBy("event_type").parquet(out)
-    back = spark.read.parquet(out).filter(F.col("event_type") == "purchase")
-    return back.select("event_id", "user_id", "event_type", "value")
+    back = spark.read.schema(events.schema).parquet(out)
+    return back.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "event_type", "value"
+    )
+
+
+# sink_compaction's fragmented-ingest file count (its oracle's n_files_before).
+_FRAGMENTS = 64
 
 
 @register(
@@ -243,15 +250,24 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Small-file compaction — the lakehouse OPTIMIZE/bin-packing "
         "maintenance pass a 100 TB table needs after streaming or "
         "fine-grained-partitioned ingest: a deliberately fragmented copy "
-        "of lineitem (64 writer tasks → 64 small files) is rewritten to "
-        "ceil(rows / 200k) right-sized files. The target file count is "
-        "derived from the ROW count (deterministic; at a fixed schema "
-        "rows proxy bytes — real systems aim ~128 MiB/file the same "
-        "way), and _metadata.file_path counts physical files on each "
-        "side. Row counts must survive both rewrites (asserted in "
-        "tests). Oracle-tier: the oracle PREDICTS the measured file "
-        "counts from the row count alone — the Spark side measures them "
-        "physically, so a lost row or a mis-packed file hash-mismatches."
+        "of lineitem (64 small files) is rewritten to ceil(rows / 200k) "
+        "right-sized files. The fragmented ingest writes its 64 files "
+        "from k writer tasks, k the largest power of two <= min(slot "
+        "width, 64), each file capped at ceil(n/64) rows "
+        "(maxRecordsPerFile): from one non-empty input split, round-robin "
+        "hands each writer floor(n/k) or ceil(n/k) rows, so each writes "
+        "exactly 64/k files whenever (64/k - 1) * ceil(n/64) < "
+        "floor(n/k) — for every n > 64 * (64/k), i.e. 1,024 rows at k=4 "
+        "and 4,096 at k=1 (every lineitem fixture is one row group of "
+        "6,000 rows or more). The id raises if the ingest measures any "
+        "other count. The target file count is derived from the ROW "
+        "count (deterministic; at a fixed schema rows proxy bytes — real "
+        "systems aim ~128 MiB/file the same way), and _metadata.file_path "
+        "counts physical files on each side. Row counts must survive "
+        "both rewrites (asserted in tests). Oracle-tier: the oracle "
+        "PREDICTS the measured file counts from the row count alone — "
+        "the Spark side measures them physically, so a lost row or a "
+        "mis-packed file hash-mismatches."
     ),
 )
 def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,25 +278,44 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
     )
-    # Fragmented ingest: 64 writer tasks → 64 small files.
-    li.repartition(64).write.mode("overwrite").parquet(frag_dir)
+    # Fragmented ingest: 64 files of at most ceil(n/64) rows from k
+    # slot-many writers, 64/k files each (bound in the doc). 64 writer
+    # tasks would each pay a fixed ~60 ms (task state with the Hadoop
+    # conf, a forked chmod per file without Hadoop's native IO) for a
+    # few KB of rows.
+    n = li.count()
+    k = 1 << (min(slot_width(spark), _FRAGMENTS).bit_length() - 1)
+    (
+        li.repartition(k)
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", math.ceil(n / _FRAGMENTS))
+        .parquet(frag_dir)
+    )
 
     def rows_and_files(df: DataFrame) -> tuple[int, int]:
         # One aggregate job per side: row count and physical file count.
+        # collect_set needs one shuffle where count_distinct needs two.
         return tuple(
             df.agg(
-                F.count(F.lit(1)), F.count_distinct(F.col("_metadata.file_path"))
+                F.count(F.lit(1)),
+                F.size(F.collect_set(F.col("_metadata.file_path"))),
             ).first()
         )
 
-    frag = spark.read.parquet(frag_dir)
+    frag = spark.read.schema(li.schema).parquet(frag_dir)
     n_rows, files_before = rows_and_files(frag)
+    if files_before != _FRAGMENTS:
+        raise RuntimeError(
+            f"fragmented ingest wrote {files_before} files of {n_rows} rows "
+            f"from {k} writers, not {_FRAGMENTS}"
+        )
     # Compact: bin-pack to ~200k rows per file (schema-fixed row→byte
     # proxy; a real table would target ~128 MiB the same way).
     n_out = max(1, math.ceil(n_rows / 200_000))
     frag.repartition(n_out).write.mode("overwrite").parquet(compact_dir)
 
-    rows = [(n_rows, files_before, *rows_and_files(spark.read.parquet(compact_dir)))]
+    compact = spark.read.schema(li.schema).parquet(compact_dir)
+    rows = [(n_rows, files_before, *rows_and_files(compact))]
     return local_frame(
         spark,
         rows,
@@ -854,7 +889,7 @@ def sink_table_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
     c.write.mode("overwrite").parquet(f"{base}/v=1")
 
-    v1 = spark.read.parquet(f"{base}/v=1")
+    v1 = spark.read.schema(c.schema).parquet(f"{base}/v=1")
     v2 = v1.filter((F.col("c_custkey") % 10) != 0).select(
         "c_custkey",
         "c_name",
@@ -864,8 +899,7 @@ def sink_table_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     v2.write.mode("overwrite").parquet(f"{base}/v=2")
 
-    def summarize(version: int) -> DataFrame:
-        snap = spark.read.parquet(f"{base}/v={version}")
+    def summarize(version: int, snap: DataFrame) -> DataFrame:
         return snap.agg(
             F.lit(version).alias("version"),
             F.count(F.lit(1)).alias("n_rows"),
@@ -873,7 +907,9 @@ def sink_table_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_acctbal"
             ),
         )
-    return summarize(1).unionByName(summarize(2)).orderBy("version")
+
+    v2_back = spark.read.schema(v2.schema).parquet(f"{base}/v=2")
+    return summarize(1, v1).unionByName(summarize(2, v2_back)).orderBy("version")
 
 
 @register(
@@ -964,7 +1000,7 @@ def join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # propagation can pre-prune — the partition filter truly arrives at
     # runtime.
     total = ev.agg((F.count(F.lit(1)) / 5.0).alias("th"))
-    (
+    tiers = (
         ev.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .crossJoin(F.broadcast(total))
@@ -974,9 +1010,8 @@ def join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("cold"))
             .alias("tier"),
         )
-        .write.mode("overwrite")
-        .parquet(out + "/dim")
     )
+    tiers.write.mode("overwrite").parquet(out + "/dim")
     # Isolated-conf clone (the join_runtime_bloom pattern): DPP's cost
     # model skips pruning for fixture-tiny scans; pin the decision confs
     # on a session whose overrides cannot leak.
@@ -985,9 +1020,10 @@ def join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     s.conf.set(
         "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio", "50"
     )
-    fact = s.read.parquet(out + "/fact")
+    fact = s.read.schema(ev.schema).parquet(out + "/fact")
     dim = (
-        s.read.parquet(out + "/dim")
+        s.read.schema(tiers.schema)
+        .parquet(out + "/dim")
         .filter(F.col("tier") == "hot")
         .select("event_type")
     )

@@ -472,10 +472,9 @@ def stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_df.write.mode("append").parquet(sink)
 
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
+    counts = counts_spec(ev).select(F.col("win.start").alias("ws"), "n_events")
     q = (
-        counts_spec(ev)
-        .select(F.col("win.start").alias("ws"), "n_events")
-        .writeStream.foreachBatch(write_batch)
+        counts.writeStream.foreachBatch(write_batch)
         .outputMode("update")
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -488,7 +487,11 @@ def stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise TimeoutError("foreachBatch parquet sink did not finish")
     finally:
         q.stop()
-    n_sink = spark.read.parquet(sink).count() if os.path.isdir(sink) else 0
+    n_sink = (
+        spark.read.schema(counts.schema).parquet(sink).count()
+        if os.path.isdir(sink)
+        else 0
+    )
     results.append(("foreach_batch_parquet", n_sink))
 
     return local_frame(spark, results, "mode string, n_rows long")
@@ -578,7 +581,7 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = scratch_dir("bdma_ckres_ckpt_")
     events_file = os.path.join(sf_dir, "events.parquet")
 
-    def run_once() -> None:
+    def run_once() -> T.StructType:
         raw = (
             spark.readStream.schema(_batch_schema(spark, events_file))
             .option("pathGlobFilter", "*.parquet")
@@ -596,6 +599,7 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not q.awaitTermination(300):
             q.stop()
             raise TimeoutError("checkpoint-resume run did not finish")
+        return typed.schema
 
     def stage_batch(tag: str) -> None:
         # Single-file fixture: one copy. Multi-file fixture (a directory
@@ -614,9 +618,10 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage_batch("batch_a")
     run_once()
     stage_batch("batch_b")
-    run_once()
+    written = run_once()
     return (
-        spark.read.parquet(sink)
+        spark.read.schema(written)
+        .parquet(sink)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )

@@ -10,18 +10,13 @@ ADVICE r7 hardening of duck_con's hive detection and path quoting.
 
 from __future__ import annotations
 
-import importlib.util
-import os
-
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from conftest import SF_SMALL
-
-_TOOLS = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+from conftest import SF_SMALL, load_tool
 
 # Count-type layer counters: for a fixed plan and fixed data they are
 # deterministic (the benchmark's per-layer "count" metrics).
@@ -41,18 +36,9 @@ _COUNTS = (
 )
 
 
-def _load_tool(name):
-    spec = importlib.util.spec_from_file_location(
-        f"{name}_tool", os.path.join(_TOOLS, f"{name}.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 @pytest.fixture(scope="module")
 def check_mod():
-    return _load_tool("check")
+    return load_tool("check")
 
 
 def test_complex_cols_detects_every_unhashable_kind(check_mod):
@@ -161,7 +147,7 @@ def test_profile_counters_plans_and_errors(spark, registry, tmp_path):
     its error and the ids after it are still profiled."""
     import json
 
-    profile_ids = _load_tool("profile_ids")
+    profile_ids = load_tool("profile_ids")
 
     def broken(spark, sf):
         raise ValueError("no such table")
@@ -188,3 +174,22 @@ def test_profile_counters_plans_and_errors(spark, registry, tmp_path):
     assert runs[0]["src_csv_roundtrip"]["counters"]["sources.files_written"] > 0
     with open(tmp_path / "0" / "broken.json") as fh:
         assert json.load(fh)["error"] == "ValueError: no such table"
+
+
+def test_profile_records_jobs_outside_sql(spark, tmp_path):
+    """An untyped parquet read infers its schema in a job that belongs to
+    no SQL execution; the profile records it, and a read given the schema
+    starts none."""
+    profile_ids = load_tool("profile_ids")
+    src = str(tmp_path / "t")
+    spark.range(10).write.parquet(src)
+    fns = {
+        "inferred": lambda s, sf: s.read.parquet(src),
+        "given": lambda s, sf: s.read.schema("id BIGINT").parquet(src),
+    }
+    runs = profile_ids.profile(spark, fns, SF_SMALL, str(tmp_path / "out"))
+    inferred = runs["inferred"]["outside_jobs"]
+    assert inferred["count"] == 1
+    assert inferred["jobs"][0]["name"].startswith("parquet at ")
+    assert inferred["jobs"][0]["duration_s"] >= 0
+    assert runs["given"]["outside_jobs"] == {"count": 0, "jobs": []}

@@ -14,7 +14,7 @@ def _ts(s: str) -> dt.datetime:
     return dt.datetime.fromisoformat(s)
 
 
-def test_asof_equal_ts_and_no_match(spark):
+def test_asof_equal_ts_and_no_match(spark, tmp_path):
     """ASOF semantics: ts-equality matches; purchase before any signup → null."""
     from big_data_management_and_analytics_spark.operators import joins
 
@@ -27,13 +27,10 @@ def test_asof_equal_ts_and_no_match(spark):
         ],
         schema="event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    import tempfile, os
-
-    d = tempfile.mkdtemp(prefix="asof_lit_")
-    ev.write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
+    ev.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
     out = {
         r["event_id"]: r["signup_ts"]
-        for r in joins.join_asof_event(spark, d).collect()
+        for r in joins.join_asof_event(spark, str(tmp_path)).collect()
     }
     assert out[1] is None  # no earlier signup
     assert out[3] == _ts("2024-01-01T11:00:00")  # equality included

@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import re
 
-from tests.conftest import SF_T2
+import pytest
+
+from tests.conftest import SF_SMALL, SF_T2, load_tool
 
 
 # An unpartitioned window's spec leads straight into a sort order; a
@@ -114,6 +116,48 @@ def test_bucketed_join_repeats_its_work(spark, registry):
     head = "== Physical Plan =="
     assert second.count(head) == first.count(head)
     assert "DropTable" not in first + second
+
+
+def _profiled(spark, build) -> tuple[list[dict], dict]:
+    """Run ``build()``; return the records of the SQL executions it started
+    (each with its final plan and its stages from the core status store)
+    and the jobs it started outside every SQL execution."""
+    store = load_tool("profile_ids").PlanStore(spark)
+    store.skip_existing()
+    build()
+    executions = store.new_executions()
+    return executions, store.outside_jobs(executions)
+
+
+@pytest.mark.parametrize("width", [1, 2, 3, 4])
+def test_compaction_ingest_runs_slot_many_writers(spark, registry, width):
+    """sink_compaction's fragmented ingest writes its 64 files from k
+    writer tasks, k the largest power of two at most the slot width
+    (spread()'s width rule), at every width."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", str(width))
+    k = 1 << (min(width, s.sparkContext.defaultParallelism).bit_length() - 1)
+    rows = []
+    executions, _ = _profiled(
+        s, lambda: rows.extend(registry["sink_compaction"].fn(s, SF_SMALL).collect())
+    )
+    assert rows[0].n_files_before == 64
+    writes = [ex for ex in executions if "InsertIntoHadoopFsRelationCommand" in ex["plan"]]
+    ingest = max(writes[0]["stages"], key=lambda st: st["stageId"])
+    assert ingest["numTasks"] == k
+
+
+@pytest.mark.parametrize(
+    "qid", ["sink_parquet_partitioned", "sink_compaction", "sink_table_versions"]
+)
+def test_sink_read_backs_start_no_job_outside_sql(spark, registry, qid):
+    """Each read of a directory the id just wrote takes the writer's
+    schema: an untyped parquet read infers it in a job of its own,
+    outside any SQL execution, where no execution counter sees it."""
+    fn = registry[qid].fn
+    fn(spark, SF_SMALL)  # load() memoizes the fixture tables' schemas
+    _, outside = _profiled(spark, lambda: fn(spark, SF_SMALL))
+    assert outside["count"] == 0, outside["jobs"]
 
 
 def test_asof_join_is_single_window_not_loop(spark, registry):

@@ -11,7 +11,11 @@ JSON per id goes to ``--out``:
 - ``counters``: ``layers.fold_pass`` over the id's executions (exchanges,
   join strategies, shuffle, scan and write counters, Python-boundary bytes);
 - ``executions``: per SQL execution, its folded counters and its final
-  (post-AQE) physical plan.
+  (post-AQE) physical plan;
+- ``outside_jobs``: the Spark jobs that ran during the id's span outside
+  every SQL execution, read from the core status store (count, and each
+  job's name and duration). Schema inference of an untyped read and
+  parallel file listing run there, where no execution counter sees them.
 
 The slowest ids are printed last. Read them for order-of-magnitude outliers
 against their family's band, not for regressions in the noise band: round
@@ -40,6 +44,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from perfbench import layers  # noqa: E402
+from py4j.protocol import Py4JJavaError  # noqa: E402
 
 # Multi-trigger streaming demo — minutes by design, exercised in pytest.
 SKIP = {"stream_output_modes"}
@@ -47,10 +52,39 @@ SLOWEST = 30
 
 
 class PlanStore(layers.StatusStore):
-    """Status-store reader whose records also carry the formatted final plan."""
+    """Status-store reader whose records also carry the formatted final plan,
+    and which also reads the jobs no SQL execution started."""
 
     def _read(self, eid: int, info: dict) -> dict:
         return {**super()._read(eid, info), "plan": info["physicalPlanDescription"]}
+
+    def skip_existing(self) -> None:
+        super().skip_existing()
+        jobs = self._app.jobsList(None)  # newest first
+        self.next_job = jobs.head().jobId() + 1 if jobs.nonEmpty() else 0
+
+    def outside_jobs(self, executions: list[dict]) -> dict:
+        """The jobs started since ``skip_existing`` that belong to none of
+        ``executions`` (job ids are contiguous per application)."""
+        inside = {job["id"] for ex in executions for job in ex["jobs"]}
+        jobs = []
+        while True:
+            try:
+                job = self._to_py(self._app.job(self.next_job))
+            except Py4JJavaError:
+                break
+            if job["jobId"] not in inside:
+                end = job.get("completionTime")
+                jobs.append(
+                    {
+                        "name": job["name"],
+                        "duration_s": (end - job["submissionTime"]) / 1e3
+                        if end is not None
+                        else None,
+                    }
+                )
+            self.next_job += 1
+        return {"count": len(jobs), "jobs": jobs}
 
 
 def profile(spark, fns: dict, sf: str, out_dir: str) -> dict[str, dict]:
@@ -84,6 +118,7 @@ def profile(spark, fns: dict, sf: str, out_dir: str) -> dict[str, dict]:
                 }
                 for ex in executions
             ],
+            "outside_jobs": store.outside_jobs(executions),
         }
         with open(os.path.join(out_dir, f"{name}.json"), "w") as fh:
             json.dump(records[name], fh, indent=1)
