@@ -235,6 +235,29 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FRAGMENTS = 64
 
 
+def _fragment_writers(n: int, splits: int, width: int) -> tuple[int, int]:
+    """``(k, cap)``: write ``n`` rows read from ``splits`` non-empty input
+    splits as exactly ``_FRAGMENTS`` files from ``k`` round-robin writers
+    (``repartition(k)``), at most ``cap`` rows per file.
+
+    Round-robin deals split p's rows over the k writers from its own
+    start, so each writer gets floor(n_p/k) or ceil(n_p/k) of them; summed
+    over the splits, with skew = (splits - 1)(k - 1), a writer's share
+    lies in [floor((n - skew)/k), ceil((n + skew)/k)]. With
+    cap = ceil((n + skew)/_FRAGMENTS), _FRAGMENTS/k files of cap rows hold
+    the largest share, and the smallest share needs all of them whenever
+    n - skew >= (_FRAGMENTS - k) * cap + k. ``k`` is the largest power of
+    two <= min(width, _FRAGMENTS) that meets this, else 1 (no skew; exact
+    for every n > 63 * 64)."""
+    k = 1 << (min(width, _FRAGMENTS).bit_length() - 1)
+    while True:
+        skew = (splits - 1) * (k - 1)
+        cap = -(-(n + skew) // _FRAGMENTS)
+        if k == 1 or n - skew >= (_FRAGMENTS - k) * cap + k:
+            return k, cap
+        k //= 2
+
+
 @register(
     "sink_compaction",
     "A",
@@ -252,17 +275,20 @@ _FRAGMENTS = 64
         "fine-grained-partitioned ingest: a deliberately fragmented copy "
         "of lineitem (64 small files) is rewritten to ceil(rows / 200k) "
         "right-sized files. The fragmented ingest writes its 64 files "
-        "from k writer tasks, k the largest power of two <= min(slot "
-        "width, 64), each file capped at ceil(n/64) rows "
-        "(maxRecordsPerFile): from one non-empty input split, round-robin "
-        "hands each writer floor(n/k) or ceil(n/k) rows, so each writes "
-        "exactly 64/k files whenever (64/k - 1) * ceil(n/64) < "
-        "floor(n/k) — for every n > 64 * (64/k), i.e. 1,024 rows at k=4 "
-        "and 4,096 at k=1 (every lineitem fixture is one row group of "
-        "6,000 rows or more). The id raises if the ingest measures any "
-        "other count. The target file count is derived from the ROW "
-        "count (deterministic; at a fixed schema rows proxy bytes — real "
-        "systems aim ~128 MiB/file the same way), and _metadata.file_path "
+        "from k round-robin writer tasks, each file capped at cap rows "
+        "(maxRecordsPerFile). Round-robin deals each of the m non-empty "
+        "input splits from its own start, so with s = (m - 1)(k - 1) a "
+        "writer's share lies in [floor((n - s)/k), ceil((n + s)/k)]; with "
+        "cap = ceil((n + s)/64) every writer writes exactly 64/k files "
+        "whenever n - s >= (64 - k) * cap + k. k is the largest power of "
+        "two <= min(slot width, 64) that meets this bound, else 1 (exact "
+        "for every n > 4,032). At m = 1 the bound is (64/k - 1) * "
+        "ceil(n/64) < floor(n/k), true for every n > 64 * (64/k): 1,024 "
+        "rows at k=4. n and m are measured in one job. The id raises if "
+        "the ingest measures any other count. The target file count is "
+        "derived from the ROW count (deterministic; at a fixed schema "
+        "rows proxy bytes — real systems aim ~128 MiB/file the same "
+        "way), and _metadata.file_path "
         "counts physical files on each side. Row counts must survive "
         "both rewrites (asserted in tests). Oracle-tier: the oracle "
         "PREDICTS the measured file counts from the row count alone — "
@@ -278,17 +304,22 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
     )
-    # Fragmented ingest: 64 files of at most ceil(n/64) rows from k
-    # slot-many writers, 64/k files each (bound in the doc). 64 writer
-    # tasks would each pay a fixed ~60 ms (task state with the Hadoop
-    # conf, a forked chmod per file without Hadoop's native IO) for a
-    # few KB of rows.
-    n = li.count()
-    k = 1 << (min(slot_width(spark), _FRAGMENTS).bit_length() - 1)
+    # Fragmented ingest: 64 files from k slot-many writers, 64/k files
+    # each (bound in the doc and _fragment_writers). 64 writer tasks would
+    # each pay a fixed ~60 ms (task state with the Hadoop conf, a forked
+    # chmod per file without Hadoop's native IO) for a few KB of rows.
+    # spark_partition_id() is nondeterministic, so it may not be an
+    # aggregate's argument; the select computes it first.
+    n, splits = (
+        li.select(F.spark_partition_id().alias("split"))
+        .agg(F.count(F.lit(1)), F.size(F.collect_set("split")))
+        .first()
+    )
+    k, cap = _fragment_writers(n, splits, slot_width(spark))
     (
         li.repartition(k)
         .write.mode("overwrite")
-        .option("maxRecordsPerFile", math.ceil(n / _FRAGMENTS))
+        .option("maxRecordsPerFile", cap)
         .parquet(frag_dir)
     )
 
@@ -307,7 +338,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     if files_before != _FRAGMENTS:
         raise RuntimeError(
             f"fragmented ingest wrote {files_before} files of {n_rows} rows "
-            f"from {k} writers, not {_FRAGMENTS}"
+            f"from {k} writers over {splits} input splits, not {_FRAGMENTS}"
         )
     # Compact: bin-pack to ~200k rows per file (schema-fixed row→byte
     # proxy; a real table would target ~128 MiB the same way).

@@ -19,7 +19,7 @@ import os
 
 import pytest
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, SF_T2
 
 _TOOL = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "make_multifile.py")
 
@@ -57,6 +57,7 @@ def _rows(df):
         "win_running_sum",
         "llm_dedup_minhash",
         "stream_tumbling_live",
+        "sink_compaction",
     ],
 )
 def test_layout_invariance(spark, registry, mf_dir, qid):
@@ -112,6 +113,7 @@ def hive_dir(tmp_path_factory):
         "agg_pricing_summary",  # lineitem grouped BY the partition column
         "tpch_q4_priority",     # orders filtered across partition values
         "llm_text_stats",       # documents with lang in the output
+        "sink_compaction",      # lineitem read as one split per hive file
     ],
 )
 def test_hive_layout_invariance(spark, registry, hive_dir, qid):
@@ -261,3 +263,60 @@ def test_hive_safe_rejects_numeric_partition_values():
     # ...but lexical near-misses Java cannot parse stay accepted.
     for ok in ("nanx", "info", "Infantry", "f1", "d2", "x0x1", "NaNo"):
         assert tool._HIVE_SAFE.match(ok), ok
+
+
+@pytest.fixture(scope="module")
+def li_6464_dir(tmp_path_factory):
+    """A 4-file lineitem of 6,464 rows (reversed, unequal parts): a
+    multiple of 64, so a fragment cap of n/64 rows leaves no slack for
+    writers' uneven shares."""
+    import pyarrow.parquet as pq
+
+    tool = _load_tool()
+    src = str(tmp_path_factory.mktemp("li6464_src") / "lineitem.parquet")
+    pq.write_table(pq.read_table(os.path.join(SF_T2, "lineitem.parquet")).slice(0, 6464), src)
+    dst = str(tmp_path_factory.mktemp("li6464"))
+    assert tool.split_table(src, os.path.join(dst, "lineitem.parquet"), 4) == 4
+    return dst
+
+
+@pytest.mark.parametrize("width", [1, 2, 4])
+def test_compaction_exact_from_multifile_input(spark, registry, li_6464_dir, width):
+    """sink_compaction's ingest deals rows round-robin from several input
+    splits, each from its own start, so writers' shares differ by up to
+    one row per split; the ingest must still write exactly 64 fragments."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", str(width))
+    [row] = registry["sink_compaction"].fn(s, li_6464_dir).collect()
+    assert tuple(row) == (6464, 64, 6464, 1)
+
+
+def test_fragment_writers_bound_holds_for_any_split_layout():
+    """Model Spark's round-robin (each split dealt from its own start) and
+    check that ``_fragment_writers``' (k, cap) yields exactly 64 files for
+    random row counts, split layouts, starts and slot widths."""
+    import random
+
+    from big_data_management_and_analytics_spark.sources.scans import (
+        _FRAGMENTS,
+        _fragment_writers,
+    )
+
+    rng = random.Random(7)
+    for _ in range(1000):
+        n = rng.randrange(63 * 64 + 1, 2_000_000)
+        splits = rng.randrange(1, 100)
+        cuts = sorted(rng.sample(range(1, n), splits - 1))
+        sizes = [b - a for a, b in zip([0, *cuts], [*cuts, n])]
+        width = rng.randrange(1, 80)
+        k, cap = _fragment_writers(n, splits, width)
+        assert k & (k - 1) == 0 and k <= min(width, _FRAGMENTS)
+        shares = [0] * k
+        for size in sizes:
+            start = rng.randrange(k)
+            for j in range(k):
+                shares[j] += size // k + ((j - start) % k < size % k)
+        assert sum(-(-s // cap) for s in shares) == _FRAGMENTS, (n, sizes, k, cap)
+    # One split: the width's k holds for every n > 64 * (64 / k).
+    assert _fragment_writers(1025, 1, 4) == (4, 17)
+    assert _fragment_writers(6000, 1, 4) == (4, 94)

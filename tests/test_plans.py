@@ -24,24 +24,23 @@ def _plan(df) -> str:
     )
 
 
+def _profiled(spark, build) -> tuple[list[dict], dict]:
+    """Run ``build()``; return the records of the SQL executions it started
+    (each with its final plan and its stages from the core status store)
+    and the jobs it started outside every SQL execution."""
+    store = load_tool("profile_ids").PlanStore(spark)
+    store.skip_existing()
+    build()
+    executions = store.new_executions()
+    return executions, store.outside_jobs(executions)
+
+
 def _executed_plans(spark, build) -> str:
     """Run ``build()`` and return the physical plans of every SQL
-    execution it started, read from the SQL status store. The two-pass
-    scan's eager _pid checkpoint hides its range exchange behind an RDD
-    scan in the returned DataFrame's plan; the checkpoint's own execution
-    still carries it."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    bus.waitUntilEmpty()
-    n = store.executionsCount()
-    eid = store.executionsList(n - 1, 1).head().executionId() + 1 if n else 0
-    build()
-    bus.waitUntilEmpty()
-    plans = []
-    while (rec := store.execution(eid)).isDefined():
-        plans.append(rec.get().physicalPlanDescription())
-        eid += 1
-    return "\n".join(plans)
+    execution it started. The two-pass scan's eager _pid checkpoint hides
+    its range exchange behind an RDD scan in the returned DataFrame's
+    plan; the checkpoint's own execution still carries it."""
+    return "\n".join(ex["plan"] for ex in _profiled(spark, build)[0])
 
 
 def test_filter_pushdown_reaches_scan(spark, registry):
@@ -116,17 +115,6 @@ def test_bucketed_join_repeats_its_work(spark, registry):
     head = "== Physical Plan =="
     assert second.count(head) == first.count(head)
     assert "DropTable" not in first + second
-
-
-def _profiled(spark, build) -> tuple[list[dict], dict]:
-    """Run ``build()``; return the records of the SQL executions it started
-    (each with its final plan and its stages from the core status store)
-    and the jobs it started outside every SQL execution."""
-    store = load_tool("profile_ids").PlanStore(spark)
-    store.skip_existing()
-    build()
-    executions = store.new_executions()
-    return executions, store.outside_jobs(executions)
 
 
 @pytest.mark.parametrize("width", [1, 2, 3, 4])
