@@ -16,7 +16,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from big_data_management_and_analytics_spark.functions.portable_hash import ph0
 from big_data_management_and_analytics_spark.functions.strings import SQL_TOKENS, tokens
 from big_data_management_and_analytics_spark.plans.registry import register
-from big_data_management_and_analytics_spark.sources.io import load, spread
+from big_data_management_and_analytics_spark.sources.io import (
+    checkpoint,
+    load,
+    spread,
+)
 
 # Token k-gram width for exact substring-span dedup. Real pipelines use
 # 50 BPE tokens (Lee et al., "Deduplicating Training Data Makes Language
@@ -348,7 +352,7 @@ def _bpe_step(words: DataFrame) -> tuple[DataFrame, DataFrame]:
     does not touch the previously taken position), and the rebuild via
     an index transform. The vocabulary relation never explodes: per
     iteration only the pair-count aggregate shuffles, and the winning
-    pair broadcasts as a 1-row relation. localCheckpoint bounds the
+    pair broadcasts as a 1-row relation. A checkpoint bounds the
     loop's lineage (repo iterative-loop rule, tests/test_plans.py)."""
     pair_arr = F.when(
         F.size("syms") >= 2,
@@ -368,7 +372,7 @@ def _bpe_step(words: DataFrame) -> tuple[DataFrame, DataFrame]:
         .orderBy(F.col("cnt").desc(), F.col("x").asc(), F.col("y").asc())
         .limit(1)
     )
-    m = m.localCheckpoint(eager=True)
+    m = m.transform(checkpoint)
 
     s = F.col("syms")
     # 0-based pair positions p where (syms[p], syms[p+1]) == (x, y).
@@ -410,7 +414,7 @@ def _bpe_step(words: DataFrame) -> tuple[DataFrame, DataFrame]:
         .withColumn("tk", taken)
         .select("w", "freq", new_syms.alias("syms"))
     )
-    return rebuilt.localCheckpoint(eager=True), m
+    return rebuilt.transform(checkpoint), m
 
 
 _CHAIN_MEMO: dict[tuple[str, str], tuple[DataFrame, list[DataFrame]]] = {}
@@ -425,7 +429,7 @@ def _bpe_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[DataFr
     hit = _CHAIN_MEMO.get(key)
     if hit is not None:
         return hit
-    words = _bpe_words0(spark, sf_dir).localCheckpoint(eager=True)
+    words = _bpe_words0(spark, sf_dir).transform(checkpoint)
     merges: list[DataFrame] = []
     for _ in range(M_BPE):
         words, m = _bpe_step(words)
@@ -454,7 +458,7 @@ def _bpe_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[DataFr
         "greedy left-to-right non-overlapping semantics (gaps-and-"
         "islands resolves x==x runs: every other position from each run "
         "head). Fully declarative per iteration — the winning pair is a "
-        "broadcast 1-row relation, not driver state; localCheckpoint "
+        "broadcast 1-row relation, not driver state; a checkpoint "
         "bounds the loop's lineage. Deterministic (cnt DESC, x, y) "
         "tie-break. Oracle: the identical 4 iterations unrolled as CTEs."
     ),
@@ -1257,7 +1261,7 @@ def llm_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     fps = (
         grams.select("doc_id", F.min("h").over(w).alias("fp"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     return _bucket_group_assign(fps, "doc_id", bucket_cols=("fp",))
 
@@ -2150,7 +2154,7 @@ def llm_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fusion); materializing once keeps the whole BM25 subtree out of
         # the final job's plan (exchange reuse is not guaranteed under AQE
         # — the round-3 re-evaluated-exchange hazard).
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     e = load(spark, sf_dir, "embeddings")
     # Rocchio centroid of the BM25 top-3 per query: ≤15 (query, doc) rows
@@ -2483,7 +2487,7 @@ def llm_prefix_cache_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.element_at("tok", 4),
             ).alias("bucket"),
         )
-        .localCheckpoint(eager=True)  # sizes + position explode reuse
+        .transform(checkpoint)  # sizes + position explode reuse
     )
     g = (
         keyed.groupBy("bucket")

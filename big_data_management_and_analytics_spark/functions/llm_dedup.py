@@ -33,7 +33,11 @@ from big_data_management_and_analytics_spark.functions.portable_hash import (
 )
 from big_data_management_and_analytics_spark.functions.strings import tokens
 from big_data_management_and_analytics_spark.plans.registry import register
-from big_data_management_and_analytics_spark.sources.io import load, spread
+from big_data_management_and_analytics_spark.sources.io import (
+    checkpoint,
+    load,
+    spread,
+)
 
 N_HASHES = 12
 BAND_SIZE = 4  # 3 bands × 4 rows
@@ -272,33 +276,33 @@ def llm_dedup_shingle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_sigs(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
+    spark: SparkSession, sf_dir: str, shared: bool = True
 ) -> DataFrame:
     """Per-doc 12-minhash signature (s0..s11) over distinct tokens, via
     the engine-portable universal hash family (one md5 per token + 12
     integer mixes — all whole-stage-codegen; see portable_hash.py).
 
-    The result is localCheckpoint'ed (lazy) when ``checkpoint`` — for
+    The result is checkpointed (lazy) when ``shared`` — for
     consumers that feed the signatures into two or more subplans, where
     each subplan would otherwise re-run the tokenize+md5 signature pass
     (and under AQE the two evaluations are the round-3 re-evaluated-
     exchange hazard class). The checkpoint stores n_docs × 17 longs —
     linear, same discipline as two_pass_scan. Consumers whose plan reads
     the signatures exactly ONCE (llm_dedup_minhash since the r6
-    window-form _bucket_group_assign) pass checkpoint=False: a
+    window-form _bucket_group_assign) pass shared=False: a
     materialization pass for a single read is pure overhead."""
     d = load(spark, sf_dir, "documents")
-    # skip_when_split ONLY on the checkpoint=False (single-read) path:
+    # skip_when_split ONLY on the shared=False (single-read) path:
     # there the words chain feeds exactly one consumer, so on a ≥width
     # multi-file input the exchange is pure cost (A/B at a 64-file sf0.1
     # copy via llm_dedup_minhash: 2.6 → 1.2 s engine-only, r7). On the
-    # checkpoint=True path the LAZY checkpoint does NOT dedupe same-job
+    # shared=True path the LAZY checkpoint does NOT dedupe same-job
     # reads — in-job sharing rides on ReuseExchange, i.e. on this very
     # exchange — so skipping it re-runs tokenize+md5 once per sig
     # consumer (llm_minhash_accuracy measured 5 → 13 s at the 64-file
     # copy before this guard).
     words = (
-        spread(d, "doc_id", skip_when_split=not checkpoint)
+        spread(d, "doc_id", skip_when_split=not shared)
         .select(
             "doc_id",
             F.explode_outer(F.array_distinct(tokens(F.col("text")))).alias("tok"),
@@ -317,7 +321,7 @@ def _minhash_sigs(
             for i in range(N_HASHES)
         ]
     )
-    return sigs.localCheckpoint(eager=False) if checkpoint else sigs
+    return sigs.transform(checkpoint, eager=False) if shared else sigs
 
 
 def _minhash_oracle_cte() -> str:
@@ -431,9 +435,9 @@ def _banded(sigs: DataFrame) -> DataFrame:
     ),
 )
 def llm_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # checkpoint=False: the window-form assignment reads the signatures
+    # shared=False: the window-form assignment reads the signatures
     # exactly once, so a materialization pass would be pure overhead.
-    sigs = _minhash_sigs(spark, sf_dir, checkpoint=False)
+    sigs = _minhash_sigs(spark, sf_dir, shared=False)
     banded = _banded(sigs)
     return _bucket_group_assign(banded, "doc_id")
 
@@ -548,12 +552,11 @@ def llm_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # string tuple).
     bands = _packed_bands()
     # membership: (doc, bucket) incidence — the bipartite edge list,
-    # materialized ONCE via localCheckpoint: unlike cache(), this also
+    # materialized ONCE via checkpoint: unlike cache(), this also
     # truncates the LOGICAL plan, so each loop iteration re-plans O(1)
     # work instead of re-analyzing the whole signature pipeline plus the
     # label history (measured 4.0 s → 1.7 s at sf0.1; same lesson as
-    # graph_pagerank — see operators/graph.py module docstring for the
-    # cluster posture of localCheckpoint vs reliable checkpoint).
+    # graph_pagerank).
     # (Measured alternatives, both rejected: caching two copies of member
     # hash-partitioned by doc_id/bucket to avoid in-loop re-shuffles was
     # slower — the membership side is small relative to the per-stage
@@ -566,8 +569,8 @@ def llm_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # buckets), so the filter's extra groupBy+join shuffles bought a 3.7%
     # row reduction. On a mostly-unique crawl corpus the same filter is
     # the right call; here it stays out. Reverted, kept as a note.)
-    member = sigs.select("doc_id", F.explode(bands).alias("bucket")).localCheckpoint(
-        eager=True
+    member = sigs.select("doc_id", F.explode(bands).alias("bucket")).transform(
+        checkpoint
     )
 
     # Convergence via the label-sum invariant: min-propagation can only
@@ -607,7 +610,7 @@ def llm_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("bucket")
                 .agg(F.min("label").alias("bucket_label"))
             )
-        # localCheckpoint (not cache): truncates the label lineage so the
+        # checkpoint (not cache): truncates the label lineage so the
         # next iteration's plan never contains this one's — constant
         # per-iteration planning cost; superseded checkpoints are dropped
         # by the ContextCleaner once unreferenced.
@@ -617,7 +620,7 @@ def llm_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("doc_id")
             .agg(F.min("bucket_label").alias("label"))
             .observe(obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s"))
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
         new_sum = obs.get["s"]
         if new_sum == prev_sum:
@@ -1677,7 +1680,7 @@ def llm_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is the BEST container per contained doc (overlap DESC, "
         "container size ASC, id ASC), so output stays ≤ n rows however "
         "dup-dense the corpus. The exploded shingle relation "
-        "materializes ONCE (eager localCheckpoint) — freq, sizes, "
+        "materializes ONCE (eager checkpoint) — freq, sizes, "
         "prefix, candidates, and verify all reuse it instead of "
         "re-tokenizing the corpus five times."
     ),
@@ -1704,7 +1707,7 @@ def llm_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = (
         spread(d, "doc_id")
         .select("doc_id", F.explode(shingle).alias("s"))
-        .localCheckpoint(eager=True)  # 5 consumers
+        .transform(checkpoint)  # 5 consumers
     )
     freq = sh.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     # One aggregate feeds both the sorted verify payload and the sizes.

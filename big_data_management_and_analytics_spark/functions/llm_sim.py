@@ -29,6 +29,7 @@ from pyspark.sql.functions import pandas_udf
 
 from big_data_management_and_analytics_spark.plans.registry import register
 from big_data_management_and_analytics_spark.sources.io import (
+    checkpoint,
     load,
     local_frame,
     scratch_dir,
@@ -1120,7 +1121,7 @@ def llm_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     best = (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     pos = best.filter(F.col("same")).select(
         "anchor_id", "label",
@@ -1253,7 +1254,7 @@ def llm_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         rel.withColumn("crank", F.row_number().over(w_rel))
         .filter(F.col("crank") <= 8)
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     a = cand.select(
         "query_id", F.col("vec_id").alias("a_id"), F.col("emb").alias("a_emb")
@@ -1272,7 +1273,7 @@ def llm_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sim_u"
             ),
         )
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     slim = cand.select("query_id", "vec_id", "rel_u", "crank")
     s1 = slim.filter(F.col("crank") == 1).select(
@@ -1302,9 +1303,7 @@ def llm_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     w2 = Window.partitionBy("query_id").orderBy(
         F.col("m2").desc(), F.col("vec_id").asc()
     )
-    c2r = c2.withColumn("rn2", F.row_number().over(w2)).localCheckpoint(
-        eager=True
-    )
+    c2r = c2.withColumn("rn2", F.row_number().over(w2)).transform(checkpoint)
     s2 = c2r.filter(F.col("rn2") == 1).select(
         "query_id", F.col("vec_id").alias("s2_id"), F.col("m2").alias("mmr2")
     )
@@ -1503,7 +1502,7 @@ def llm_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         # repartition right back). Hashing by vec_id also pre-shuffles
         # for the final per-vector groupBy.
         .repartition(par, "vec_id")
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     # Seed codebook: the 16 lowest vec_ids, each vector's 8 subspace
     # slices rounded Spark-side (F.round half-up — python round() is

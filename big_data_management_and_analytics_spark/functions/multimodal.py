@@ -28,7 +28,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from big_data_management_and_analytics_spark.plans.registry import register
-from big_data_management_and_analytics_spark.sources.io import load
+from big_data_management_and_analytics_spark.sources.io import checkpoint, load
 
 PGM_WIDTH = 32
 
@@ -725,7 +725,7 @@ _SQL_BAND_VALUES = ", ".join(f"({k}, b{k})" for k in range(PHASH_N_BANDS))
 def _phash_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, b0..b7) aHash band table, hashed once per query.
 
-    Lazy localCheckpoint: the per-image Python hash pass can feed BOTH
+    Lazy checkpoint: the per-image Python hash pass can feed BOTH
     sides of a self-join, and Spark does not reuse the exchange across
     differently-aliased subplans — without this the decode+hash work
     (the expensive part) executes twice."""
@@ -743,8 +743,8 @@ def _phash_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             yield out
 
-    return media.mapInPandas(hash_batch, hash_schema).localCheckpoint(
-        eager=False
+    return media.mapInPandas(hash_batch, hash_schema).transform(
+        checkpoint, eager=False
     )
 
 
@@ -1105,7 +1105,7 @@ def vad_frames_batch(
         "exactly this pass to drop silence and split long recordings "
         "before transcription. Plan: one map-only Arrow decode pass "
         "emitting ~5 counter rows per doc (materialized once via lazy "
-        "localCheckpoint — two consumers), then keyed windows and "
+        "checkpoint — two consumers), then keyed windows and "
         "aggregates over counters, never samples: per-doc state is "
         "frames, not audio bytes, so a 100 TB corpus streams through "
         "with executor memory bounded by frame counts. The activity "
@@ -1125,8 +1125,8 @@ def mm_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("ssq", T.LongType()),
         ]
     )
-    frames = audio.mapInPandas(vad_frames_batch, schema).localCheckpoint(
-        eager=False
+    frames = audio.mapInPandas(vad_frames_batch, schema).transform(
+        checkpoint, eager=False
     )
     w = Window.partitionBy("doc_id").orderBy("frame_id")
     active = F.col("ssq") > F.col("f_len").cast("long") * VAD_MEANSQ

@@ -17,6 +17,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import ArrayType, DataType, StructType
 
+from big_data_management_and_analytics_spark.sources.io import checkpoint
+
 
 def _literal(value: Any, dtype: DataType) -> Column:
     """A collected (or driver-folded) value as a literal of type ``dtype``."""
@@ -57,16 +59,12 @@ def two_pass_scan(
     # hence the partition boundaries: the two evaluations then disagree
     # on spark_partition_id per row and the offsets silently corrupt the
     # scan (observed: prefix sums exceeding the relation size at
-    # shuffle=17). The eager localCheckpoint freezes _pid ONCE for every
-    # consumer. Cluster posture: linear cost, but localCheckpoint blocks
-    # live only on the executors that computed them — a lost executor
-    # loses its blocks and the query fails rather than recomputing.
-    # Reliable checkpoint() (to a shared checkpoint directory) is the
-    # answer for clusters where executor loss must be survived.
+    # shuffle=17). The eager checkpoint freezes _pid ONCE for every
+    # consumer, at linear cost.
     ranged = (
         df.repartitionByRange(num_partitions, *order)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     parts = ranged.groupBy("_pid").agg(part_agg().alias("_pagg"))
     dtype = parts.schema["_pagg"].dataType

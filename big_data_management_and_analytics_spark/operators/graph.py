@@ -4,17 +4,14 @@ The engine's iterative-DataFrame pattern applied to the other classic:
 PageRank. Round-3 lesson encoded here: cache+count truncates RECOMPUTE
 but not the logical plan — after k iterations Catalyst re-analyzes a
 k-deep tree every pass and iteration time grows without bound (measured
-0.8 s → 4.4 s by iteration 10). ``localCheckpoint(eager=True)`` truncates
-the PLAN (the DataFrame becomes a scan of materialized partitions), so
-every iteration re-plans O(1) work. Checkpointing every 2nd iteration
-halves materialization jobs while keeping plan depth bounded at 2
+0.8 s → 4.4 s by iteration 10). An eager ``sources/io.py::checkpoint``
+truncates the PLAN (the DataFrame becomes a scan of materialized
+partitions), so every iteration re-plans O(1) work. Checkpointing every 2nd
+iteration halves materialization jobs while keeping plan depth bounded at 2
 (measured 19.9 s → ~7.5 s end-to-end at sf0.1).
 
-Cluster posture: localCheckpoint stores partitions on executors (lost
-executors would need a loop restart); a production deployment swaps in
-reliable ``checkpoint()`` against the cluster FS — one-line change, same
-plan shape. The degree fold broadcasts (n_nodes rows); past ~10^8 nodes
-it becomes the shuffle join AQE would pick anyway.
+The degree fold broadcasts (n_nodes rows); past ~10^8 nodes it becomes the
+shuffle join AQE would pick anyway.
 
 Determinism: all arithmetic is integer fixed-point at 10^-15 scale —
 long division floors deterministically and long sums are exact and
@@ -31,7 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from big_data_management_and_analytics_spark.plans.registry import register
-from big_data_management_and_analytics_spark.sources.io import load
+from big_data_management_and_analytics_spark.sources.io import checkpoint, load
 
 # Fixed-point scale: ranks sum to ~SCALE; per-node ranks ≤ SCALE fit a
 # long, and the damping step computes mass DIV 100 * 85 (shed two digits
@@ -98,7 +95,7 @@ def _pagerank_oracle(iters: int = 10) -> str:
         "exact, so ranks are partition-invariant where double "
         "accumulation would drift (floor loss only ever SHRINKS mass, "
         "bounded by edges·10^-15 per pass — asserted in tests). The "
-        "distinct pair set materializes once (localCheckpoint) and the "
+        "distinct pair set materializes once (checkpoint) and the "
         "degree is folded into the edge table by ONE broadcast join "
         "before the loop; each pass is one edge⋈rank join plus one "
         "partial-aggregated dst groupBy, with the rank table "
@@ -124,7 +121,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
@@ -135,7 +132,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Fold the degree into the edge table ONCE via broadcast (n_nodes
     # rows — tiny beside the edge list) instead of a second join every
     # iteration; checkpoint so the loop reads materialized edges.
-    # repartition("src") BEFORE the checkpoint (r6): localCheckpoint
+    # repartition("src") BEFORE the checkpoint (r6): a checkpoint
     # preserves output partitioning, so every iteration's edgew⋈ranks
     # join reuses this one-time shuffle instead of re-exchanging the
     # full edge table ten times — the "reuse a partitioning across
@@ -145,13 +142,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.join(F.broadcast(deg), "src")
         .select("src", "dst", "out_deg")
         .repartition("src")
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     teleport_fp = (SCALE * 15 // 100) // n_nodes  # (1-α)/n at fixed point
 
     ranks = nodes.select(
         "src", F.lit(SCALE // n_nodes).cast("long").alias("rank_fp")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     for it in range(10):
         contribs = edgew.join(ranks, "src").select(
             "dst", F.expr("rank_fp DIV out_deg").alias("w")
@@ -169,7 +166,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Truncate the plan every 2nd pass (and on the last): bounded
         # plan depth, half the materialization jobs.
         if (it + 1) % 2 == 0 or it == 9:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = ranks.transform(checkpoint)
     is_supp = F.col("src") % 2 == 1
     return ranks.select(
         (F.col("src") / 2).cast("long").alias("node_id"),
@@ -244,7 +241,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # Materialized once: consumed by three join branches + the degree
         # aggregate (same discipline as the pagerank pair set).
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     deg = (
         pairs.select(F.col("a").alias("v"))
@@ -320,7 +317,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
-        .localCheckpoint(eager=True)  # three consumers below
+        .transform(checkpoint)  # three consumers below
     )
     deg = pairs.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
     a = pairs.select(F.col("c"), F.col("s").alias("s_a"))
@@ -382,14 +379,13 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "join the frontier to the edge table, anti-join against the "
         "settled distance set (only NEW nodes advance — each node is "
         "expanded exactly once, so total work is O(edges · diameter/"
-        "diameter) = O(edges)), localCheckpoint to keep the iterative "
+        "diameter) = O(edges)), a checkpoint to keep the iterative "
         "plan depth bounded (the graph.py lineage lesson). All-integer "
         "distances — partition-order exact. The oracle is a bounded "
         "recursive CTE whose UNION-dedup enumeration of (node, d) pairs "
         "min-aggregates to the identical BFS levels. At 100 TB the "
         "frontier join shuffles by node id per hop — the standard "
-        "Pregel-style plan; localCheckpoint swaps to reliable "
-        "checkpoint() on a cluster."
+        "Pregel-style plan."
     ),
 )
 def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -403,7 +399,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
@@ -413,7 +409,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("c_custkey") * 2).alias("node"))
         .withColumn("dist", F.lit(0))
     )
-    dist = seeds.localCheckpoint(eager=True)
+    dist = seeds.transform(checkpoint)
     frontier = dist.select("node")
     for hop in range(1, 5):
         cand = (
@@ -424,9 +420,9 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         new = (
             cand.join(dist.select("node"), "node", "left_anti")
             .withColumn("dist", F.lit(hop))
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
-        dist = dist.unionAll(new).localCheckpoint(eager=True)
+        dist = dist.unionAll(new).transform(checkpoint)
         frontier = new.select("node")
     return dist.select(
         F.col("node").cast("bigint").alias("node"),
@@ -471,7 +467,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         "degree count → (side, degree) histogram: two map-side-"
         "combinable hash aggregates after one shuffle join, output "
         "bounded by max-degree, integers only. The two sides reuse ONE "
-        "distinct pair set (localCheckpoint, the module's pattern) "
+        "distinct pair set (checkpoint, the module's pattern) "
         "rather than re-deriving the join per side."
     ),
 )
@@ -482,7 +478,7 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     degs = (
         pairs.groupBy("c")
@@ -550,7 +546,7 @@ def _kcore_oracle(k: int = K_CORE_K, rounds: int = K_CORE_ROUNDS) -> str:
         "is below k until a fixed point — the standard cohesion filter "
         "for 'who trades with a well-connected circle'. Each round is "
         "one degree aggregate plus two anti-joins (edges touching peeled "
-        "nodes), with eager localCheckpoints bounding lineage exactly "
+        "nodes), with eager checkpoints bounding lineage exactly "
         "like graph_pagerank's loop; peeling is monotone so rounds ~ "
         "graph diameter layers, each linear in surviving edges. Oracle-"
         f"tier via {K_CORE_ROUNDS} unrolled CTE rounds — peeling is "
@@ -570,17 +566,17 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     for _ in range(K_CORE_ROUNDS):
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
         bad = (
             deg.filter(F.col("c") < K_CORE_K)
             .select("src")
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
         if bad.isEmpty():
             break  # fixed point — further rounds are no-ops
@@ -588,8 +584,20 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             edges.join(bad, "src", "left_anti")
             .join(bad.select(F.col("src").alias("dst")), "dst", "left_anti")
             .select("src", "dst")
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
+    else:
+        # Every round peeled something. Unless the last one reached the
+        # fixed point, the oracle's unroll stops at the same bound and
+        # would hash-match a graph that is not the k-core, so confirm it
+        # and fail loudly as llm_dedup_components does. Only a run that
+        # used every round pays for this degree check.
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
+        if not deg.filter(F.col("c") < K_CORE_K).isEmpty():
+            raise RuntimeError(
+                "graph_kcore: degree peeling did not reach its fixed point "
+                f"within {K_CORE_ROUNDS} rounds; raise K_CORE_ROUNDS"
+            )
     return edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("core_degree")
     ).select(
@@ -661,7 +669,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "edges, degree endpoints, m), the only floats are the final "
         "per-community round-6 expressions, so the score is partition-"
         "invariant and hash-verifiable. Plan: the distinct pair set "
-        "materializes once (lazy localCheckpoint — four consumer "
+        "materializes once (lazy checkpoint — four consumer "
         "subplans), nations attach via broadcast dims, and every "
         "aggregate is a partial-agg hash groupBy on a ≤25-key community "
         "column; the single 1-row m broadcast is the counters-not-data "
@@ -693,7 +701,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey") == F.col("snk"),
         )
         .select("c", "s", "cn", "sn")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     m = pn.agg(F.count(F.lit(1)).alias("m"))
     ends = pn.select(F.col("cn").alias("community")).unionAll(
@@ -794,7 +802,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
@@ -898,7 +906,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # One materialization feeds the three triangle branches + degrees
         # (graph_triangle_count's discipline).
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     deg = (
         pairs.select(F.col("a").alias("v"))
@@ -1022,7 +1030,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_custkey").isNotNull())
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
-        .localCheckpoint(eager=True)  # 4 half-steps + the node inits
+        .transform(checkpoint)  # 4 half-steps + the node inits
     )
     # (r6 A/B, kept single-copy: per-key pre-partitioned edge copies
     # measured a wash here — 2 extra materialization jobs vs 4 saved
@@ -1059,7 +1067,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             # llm_dedup_components does) measured a WASH here — the
             # total agg is a cheap read of the checkpoint — so the
             # simpler scalar-subquery crossJoin stays.
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
         tot = raw.agg(F.sum("r").alias("t"))
         return raw.crossJoin(F.broadcast(tot)).select(
@@ -1156,7 +1164,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         "handling (the published algorithm's coin flip is replaced by "
         "min-label, the same derandomization llm_embed_kmeans uses for "
         "seeds). Plan: the distinct edge set materializes once "
-        "(localCheckpoint, reused by all three half-steps); each "
+        "(checkpoint, reused by all three half-steps); each "
         "half-step is one edge-keyed equi-join + count aggregate + "
         "per-node top-1 window (partitioned by node, never global) — "
         "three linear shuffles total, the same per-iteration cost "
@@ -1171,7 +1179,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
-        .localCheckpoint(eager=True)  # 3 half-step consumers
+        .transform(checkpoint)  # 3 half-step consumers
     )
     # (r6 A/B, kept single-copy: pre-partitioned per-key edge copies — the
     # graph_hits/pagerank move — measured SLOWER here: 3 half-steps save

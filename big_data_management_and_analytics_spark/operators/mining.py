@@ -33,7 +33,7 @@ from big_data_management_and_analytics_spark.operators.global_rank import (
 )
 from big_data_management_and_analytics_spark.plans.determinism import money_sum_fast
 from big_data_management_and_analytics_spark.plans.registry import register
-from big_data_management_and_analytics_spark.sources.io import load
+from big_data_management_and_analytics_spark.sources.io import checkpoint, load
 
 
 @register(
@@ -878,7 +878,7 @@ def agg_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "priority — the categorical-association screen of an experiment/"
         "feature-audit pipeline. The contingency table is ONE distributed "
         "hash aggregate; everything after operates on the <=|segs|x|prios| "
-        "cell relation, localCheckpointed once so row totals, column "
+        "cell relation, checkpointed once so row totals, column "
         "totals, and the grand total do not re-run the base join "
         "(the graph.py multi-consumer pattern). Missing cells matter "
         "((0-e)^2/e = e != 0), so the full row x column grid is rebuilt "
@@ -901,7 +901,7 @@ def agg_chisq_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderpriority").alias("prio"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint(eager=True)  # 4 consumers: rows/cols/tot/grid
+        .transform(checkpoint)  # 4 consumers: rows/cols/tot/grid
     )
     rows_ = cells.groupBy("seg").agg(F.sum("n").cast("bigint").alias("rn"))
     cols_ = cells.groupBy("prio").agg(F.sum("n").cast("bigint").alias("cn"))
@@ -1033,7 +1033,7 @@ def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("c1"),
         )
-        .localCheckpoint(eager=True)  # feeds the scan AND the totals
+        .transform(checkpoint)  # feeds the scan AND the totals
     )
     cum = with_global_prefix_sums(
         counts, [F.col("v").asc()], ["c0", "c1"], ["cum0", "cum1"]
@@ -1155,7 +1155,7 @@ def agg_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("c0"),
             F.count(F.lit(1)).cast("bigint").alias("ct"),
         )
-        .localCheckpoint(eager=True)  # feeds the scan AND the totals
+        .transform(checkpoint)  # feeds the scan AND the totals
     )
     cum = with_global_prefix_sum(counts, [F.col("v").asc()], "ct", out="cumt")
     tot = counts.agg(
@@ -1670,7 +1670,7 @@ def agg_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("pos").cast("bigint").alias("c1"),
             F.count(F.lit(1)).cast("bigint").alias("ct"),
         )
-        .localCheckpoint(eager=True)  # scan + totals consumers
+        .transform(checkpoint)  # scan + totals consumers
     )
     cum = with_global_prefix_sum(
         counts, [F.col("score").asc()], "ct", out="cumt"
@@ -1873,7 +1873,7 @@ def mkt_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey")
         .distinct()
         # Feeds the self-join (twice) and the marginal counts.
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     ic = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("ci"))
     a = li.select("l_orderkey", F.col("l_partkey").alias("i"))
@@ -1980,7 +1980,7 @@ def mkt_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .select("l_orderkey", F.col("p_brand").alias("item"))
         .distinct()
-        .localCheckpoint(eager=True)  # 3 join branches + marginals + N
+        .transform(checkpoint)  # 3 join branches + marginals + N
     )
     n = items.select("l_orderkey").distinct().agg(
         F.count(F.lit(1)).alias("n_orders")
@@ -2073,7 +2073,7 @@ def mkt_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         "needs no tiebreak (equal-date pairs are excluded BOTH ways, "
         "symmetric in both engines); all counts exact BIGINTs; the one "
         "double is the final round-6 ratio. Plan: the (customer, brand, "
-        "date) item set materializes once (localCheckpoint — both pair "
+        "date) item set materializes once (checkpoint — both pair "
         "branches and the antecedent marginal reuse it); the sequence "
         "join is keyed on the CUSTOMER (Σ per-customer item-pairs, "
         "linear in customers for bounded purchase history, never a "
@@ -2095,7 +2095,7 @@ def mkt_sequential_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").alias("d"),
         )
         .distinct()
-        .localCheckpoint(eager=True)  # 2 pair branches + marginal
+        .transform(checkpoint)  # 2 pair branches + marginal
     )
     a = items.select("c", F.col("item").alias("antecedent"), F.col("d").alias("da"))
     b = items.select("c", F.col("item").alias("consequent"), F.col("d").alias("db"))

@@ -13,7 +13,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from big_data_management_and_analytics_spark.plans.determinism import cents, money_sum_fast
 from big_data_management_and_analytics_spark.plans.registry import register
-from big_data_management_and_analytics_spark.sources.io import load, local_frame
+from big_data_management_and_analytics_spark.sources.io import (
+    checkpoint,
+    load,
+    local_frame,
+)
 
 
 def _pround6(col):
@@ -2058,7 +2062,7 @@ def win_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "month-grain hash aggregate. Slopes are exact-cents differences "
         "divided once (identical double op both engines); medians "
         "interpolate the two middle elements identically in Spark and "
-        "DuckDB. The month-grain aggregate localCheckpoints once — it "
+        "DuckDB. The month-grain aggregate is checkpointed once — it "
         "feeds both sides of the pair self-join and the residual pass."
     ),
 )
@@ -2074,7 +2078,7 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy(F.col("c_mktsegment").alias("seg"), m.alias("m"))
         .agg(F.sum(cents("o_totalprice")).alias("yc"))
-        .localCheckpoint(eager=True)  # both pair sides + residual pass
+        .transform(checkpoint)  # both pair sides + residual pass
     )
     a, b = pts.alias("a"), pts.alias("b")
     pairs = a.join(
@@ -2571,7 +2575,7 @@ def dq_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("cp_"), F.lit(0)).cast("bigint").alias("cp"),
             F.coalesce(F.col("cq_"), F.lit(0)).cast("bigint").alias("cq"),
         )
-        .localCheckpoint(eager=True)  # bins + totals consumers
+        .transform(checkpoint)  # bins + totals consumers
     )
     tot = c.agg(F.sum("cp").alias("tp"), F.sum("cq").alias("tq"))
     j = c.crossJoin(F.broadcast(tot))
@@ -3341,7 +3345,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         trans0.select(F.col("prev_type").alias("next_type")).distinct(),
         "next_type",
         "left_semi",
-    ).localCheckpoint(eager=True)  # consumed by totals + p + the 3 iterations
+    ).transform(checkpoint)  # consumed by totals + p + the 3 iterations
     totals = trans.groupBy("prev_type").agg(F.sum("n").alias("total"))
     kk = totals.agg(F.count(F.lit(1)).alias("k"))
     p = (
@@ -3351,7 +3355,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("next_type").alias("j"),
             (F.col("n").cast("double") / F.col("total")).alias("pij"),
         )
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     pi = totals.crossJoin(F.broadcast(kk)).select(
         F.col("prev_type").alias("state"), (F.lit(1.0) / F.col("k")).alias("pi")
@@ -4543,7 +4547,7 @@ def events_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(chan.alias("b"), F.col("b.t") < F.col("a.t"), "left")
         .groupBy(F.col("a.t").alias("t"))
         .agg(F.count(F.col("b.t")).cast("int").alias("bit"))
-        .localCheckpoint(eager=True)  # reused by umask + contrib
+        .transform(checkpoint)  # reused by umask + contrib
     )
     c_row = chan.agg(F.count(F.lit(1)).cast("int").alias("c"))
     conv = (
@@ -4579,7 +4583,7 @@ def events_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("s")
         .agg(F.coalesce(F.sum("cnt"), F.lit(0)).cast("bigint").alias("v"))
-        .localCheckpoint(eager=True)  # joined twice below
+        .transform(checkpoint)  # joined twice below
     )
     fact = F.array(*[F.lit(x) for x in [1, 1, 2, 6, 24, 120, 720]])
     pop = sum(
@@ -4705,7 +4709,7 @@ def ts_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n"),
         )
         .filter(F.col("n") >= 21)
-        .localCheckpoint(eager=True)  # both sides of the pair join
+        .transform(checkpoint)  # both sides of the pair join
     )
     win = h.select(
         "event_type",
@@ -4857,7 +4861,7 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         e.groupBy("event_type", "d")
         .agg(F.sum("_vc").alias("xc"))
-        .localCheckpoint(eager=True)  # pair join both sides + ties + n
+        .transform(checkpoint)  # pair join both sides + ties + n
     )
     a = daily.select("event_type", F.col("d").alias("da"), F.col("xc").alias("xa"))
     b = daily.select(

@@ -3,7 +3,8 @@
 Every query goes through ``load`` so the events ns→µs recipe and schema
 validation are applied uniformly. ``register_views`` exposes all tables as
 temp views for the SQL entry point (SURVEY.md §3 entry point 2).
-``scratch_dir`` is where every file a query writes lives.
+``scratch_dir`` is where every file a query writes lives. ``checkpoint`` is
+the one place lineage is truncated.
 
 Scale note: loads are plain ``spark.read.parquet`` — column pruning and
 predicate pushdown reach the scan because nothing here materializes or caches;
@@ -292,3 +293,41 @@ def spread(df: DataFrame, *keys: str, skip_when_split: bool = False) -> DataFram
         except Exception:
             pass
     return df.repartition(n, *keys)
+
+
+# The SparkContext the checkpoint policy was last read from, and whether it
+# has a checkpoint dir. One slot: a process runs one SparkContext at a time.
+_CHECKPOINT_POLICY: tuple[object, bool] | None = None
+
+
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Truncate ``df``'s lineage: the returned frame scans materialized rows
+    (``LogicalRDD``, output partitioning kept), so an iterative loop
+    re-plans O(1) work per round and a frame read by several consumers is
+    computed once. Call it as ``df.transform(checkpoint)`` or
+    ``df.transform(checkpoint, eager=False)``; it is the only caller of
+    Spark's checkpoints in the package.
+
+    Which checkpoint is the deployment's choice, through Spark's own conf:
+
+    - no checkpoint dir (the default): ``localCheckpoint``. The rows live
+      in the block managers of the executors that computed them, so a
+      lost executor loses its blocks and the next action fails
+      (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``) instead of recomputing.
+    - ``spark.checkpoint.dir`` set to a path every executor can reach:
+      reliable ``checkpoint``. The rows are written there, and a query
+      survives losing an executor. The same plans, one more write per
+      checkpoint. The files stay after the query unless
+      ``spark.cleaner.referenceTracking.cleanCheckpoints`` is true.
+
+    The dir is read once per SparkContext (``getCheckpointDir`` is three
+    py4j commands, and one ``llm_dedup_components`` build checkpoints seven
+    times), so set it through the conf before the first query, not with a
+    later ``setCheckpointDir``."""
+    global _CHECKPOINT_POLICY
+    sc = df.sparkSession.sparkContext
+    if _CHECKPOINT_POLICY is None or _CHECKPOINT_POLICY[0] is not sc:
+        _CHECKPOINT_POLICY = (sc, sc.getCheckpointDir() is not None)
+    if _CHECKPOINT_POLICY[1]:
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)

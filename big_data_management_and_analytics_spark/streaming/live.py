@@ -14,6 +14,7 @@ TIMESTAMP(NANOS) reads as int64 under nanosAsLong and is converted by
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import uuid
@@ -40,8 +41,15 @@ from big_data_management_and_analytics_spark.streaming.batch_twins import (
 
 def _batch_schema(spark: SparkSession, sample_file: str) -> T.StructType:
     """Schema a batch read resolves for the file — the unit-correct source
-    of truth for the explicit schema readStream requires."""
-    return spark.read.parquet(sample_file).schema
+    of truth for the explicit schema readStream requires. An untyped read
+    infers it in a job of its own, so it is memoized per (session,
+    absolute path), as ``load`` memoizes its frames."""
+    return _resolved_schema(spark, os.path.abspath(sample_file))
+
+
+@functools.lru_cache(maxsize=64)
+def _resolved_schema(spark: SparkSession, path: str) -> T.StructType:
+    return spark.read.parquet(path).schema
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -706,6 +706,7 @@ def test_bpe_merge_greedy_left_to_right(spark, tmp_path):
     [aa, aa] and 'aaa' to [aa, a] — every other match position from each
     run head, never the textual-replace artifact [aa, a, aa]."""
     from big_data_management_and_analytics_spark.functions import llm_corpus
+    from big_data_management_and_analytics_spark.sources.io import checkpoint
 
     docs = spark.createDataFrame(
         [(1, "aaaa aaaa aaaa aaa", "en", "s", 1), (2, "b c", "en", "s", 1)],
@@ -713,7 +714,7 @@ def test_bpe_merge_greedy_left_to_right(spark, tmp_path):
     )
     d = str(tmp_path / "bpe")
     docs.write.mode("overwrite").parquet(d + "/documents.parquet")
-    w0 = llm_corpus._bpe_words0(spark, d).localCheckpoint(eager=True)
+    w0 = llm_corpus._bpe_words0(spark, d).transform(checkpoint)
     w1, m1 = llm_corpus._bpe_step(w0)
     merge = m1.collect()[0]
     assert (merge["x"], merge["y"]) == ("a", "a")
@@ -2590,12 +2591,9 @@ def test_scene_cut_brute_force(spark, tmp_path):
     )
 
 
-def test_kcore_cascade_peel(spark, tmp_path):
+def _kcore_cascade_dir(spark, tmp_path) -> str:
     """K5,5 plus a degree-4 customer X and a supplier T whose 5th
-    neighbor is X: round 1 peels X, round 2 peels T (the cascade), and
-    the surviving 5-core is exactly K5,5 with every degree 5."""
-    from big_data_management_and_analytics_spark.operators import graph
-
+    neighbor is X: round 1 peels X, round 2 peels T (the cascade)."""
     edges = [(c, s) for c in range(1, 6) for s in range(1, 6)]
     edges += [(6, s) for s in (1, 2, 3, 6)]      # X: degree 4
     edges += [(c, 6) for c in range(1, 5)]       # T: c1-c4 + X = degree 5
@@ -2612,11 +2610,38 @@ def test_kcore_cascade_peel(spark, tmp_path):
     d = str(tmp_path / "kcore")
     orders.write.parquet(d + "/orders.parquet")
     li.write.parquet(d + "/lineitem.parquet")
-    out = graph.graph_kcore(spark, d).collect()
+    return d
+
+
+def test_kcore_cascade_peel(spark, tmp_path):
+    """The surviving 5-core of the cascade fixture is exactly K5,5 with
+    every degree 5."""
+    from big_data_management_and_analytics_spark.operators import graph
+
+    out = graph.graph_kcore(spark, _kcore_cascade_dir(spark, tmp_path)).collect()
     survivors = {(r["side"], r["node_id"]): r["core_degree"] for r in out}
     assert len(survivors) == 10
     assert all(v == 5 for v in survivors.values())
     assert ("customer", 6) not in survivors and ("supplier", 6) not in survivors
+
+
+@pytest.mark.parametrize("rounds", [1, 2])
+def test_kcore_fails_loudly_short_of_its_fixed_point(
+    spark, tmp_path, monkeypatch, rounds
+):
+    """With the peel bound below the cascade's 2 rounds, graph_kcore raises
+    instead of returning a graph that still holds a degree-4 node; with
+    the bound at 2 the last round reached the fixed point and the 5-core
+    is returned."""
+    from big_data_management_and_analytics_spark.operators import graph
+
+    monkeypatch.setattr(graph, "K_CORE_ROUNDS", rounds)
+    d = _kcore_cascade_dir(spark, tmp_path)
+    if rounds == 1:
+        with pytest.raises(RuntimeError, match="fixed point within 1 rounds"):
+            graph.graph_kcore(spark, d)
+    else:
+        assert graph.graph_kcore(spark, d).count() == 10
 
 
 def test_kcore_output_is_fixed_point(spark):
@@ -5481,6 +5506,18 @@ def test_components_oracle_converges_inside_unroll_bound(sf):
     lbl = dict(last)
     assert all(lbl[rep] == rep for rep in set(lbl.values()))
     assert all(rep <= doc for doc, rep in lbl.items())
+
+
+def test_components_fail_loudly_short_of_their_fixpoint(spark, monkeypatch):
+    """At sf0.01 the labels change for 4 rounds; with the bound at 2 the
+    engine raises instead of returning a partial closure."""
+    from tests.conftest import SF_T2
+
+    from big_data_management_and_analytics_spark.functions import llm_dedup
+
+    monkeypatch.setattr(llm_dedup, "COMPONENTS_ORACLE_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="did not reach its fixpoint within 2"):
+        llm_dedup.llm_dedup_components(spark, SF_T2)
 
 
 def test_events_value_is_cents_grained(spark):

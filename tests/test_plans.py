@@ -136,14 +136,21 @@ def test_compaction_ingest_runs_slot_many_writers(spark, registry, width):
 
 
 @pytest.mark.parametrize(
-    "qid", ["sink_parquet_partitioned", "sink_compaction", "sink_table_versions"]
+    "qid",
+    [
+        "sink_parquet_partitioned",
+        "sink_compaction",
+        "sink_table_versions",
+        "stream_checkpoint_resume",
+    ],
 )
 def test_sink_read_backs_start_no_job_outside_sql(spark, registry, qid):
     """Each read of a directory the id just wrote takes the writer's
     schema: an untyped parquet read infers it in a job of its own,
-    outside any SQL execution, where no execution counter sees it."""
+    outside any SQL execution, where no execution counter sees it. A
+    stream's source schema is inferred once per session and file."""
     fn = registry[qid].fn
-    fn(spark, SF_SMALL)  # load() memoizes the fixture tables' schemas
+    fn(spark, SF_SMALL)  # load() and live.py memoize the fixture schemas
     _, outside = _profiled(spark, lambda: fn(spark, SF_SMALL))
     assert outside["count"] == 0, outside["jobs"]
 
@@ -249,8 +256,8 @@ def test_full_tpch_composites_plan_shape(spark, registry):
 
 
 def test_iterative_loops_truncate_lineage(spark, registry):
-    """graph_pagerank and llm_dedup_components claim localCheckpoint
-    lineage truncation: the RETURNED DataFrame's plan must read the
+    """graph_pagerank and llm_dedup_components claim checkpoint lineage
+    truncation: the RETURNED DataFrame's plan must read the
     materialized checkpoint (ExistingRDD scan), not replay the iteration
     history back to the parquet scans — the round-3 plan-growth fix."""
     for name in ("graph_pagerank", "llm_dedup_components"):
